@@ -163,13 +163,14 @@ def main() -> None:
         emb.unpersist()
 
     if which == "batchwand":
-        # r6 VERDICT next-5: MEASURE the "all-subscriber bound almost never
-        # fires" claim behind topk_batch's no-block-max choice. For batch
-        # widths 4/8/24 over the big tier: per (block, subscribed-query)
-        # pair, is bound(block leg) + other-legs-ub < the query's FINAL
-        # k-th score (the loosest threshold any partition could ever
-        # prune with)? And per block, do ALL subscribers fail (the only
-        # case the batch kernel could skip the decode)?
+        # r6 VERDICT next-5: MEASURE how often the all-subscriber skip
+        # rule can fire in topk_batch. The one top-k kernel skips a block
+        # only when EVERY subscribed query's bound is below its own
+        # threshold. For batch widths 4/8/24 over the big tier: per (block,
+        # subscribed-query) pair, is bound(block leg) + other-legs-ub < the
+        # query's FINAL k-th score (the loosest threshold any partition
+        # could ever prune with)? And per block, do ALL subscribers fail
+        # (the only case the shared kernel skips the decode)?
         import numpy as np
 
         from iresearch_spark.index.segments import IndexStore, build_segment

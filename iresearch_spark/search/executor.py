@@ -9,15 +9,21 @@ in Spark terms:
               core/search/bm25.cpp:366-410);
   execute   = one job: parquet scan of packed posting blocks with `term IN`
               pushdown -> (for multi-leg queries) ONE repartition of the
-              packed blocks by (segment, chunk) -> an Arrow mapInPandas
-              kernel that unpacks delta+varint blocks, scores them, and
-              reduces per-doc sums LOCALLY (a doc's postings for every
-              query term live in the same chunk group, so no downstream
-              groupBy shuffle exists at all);
+              packed blocks by (segment, chunk) -> ONE Arrow mapInPandas
+              top-k kernel (`_topk_kernel`) that unpacks delta+varint
+              blocks, scores them, and reduces per-doc sums LOCALLY (a
+              doc's postings for every query term live in the same chunk
+              group, so no downstream groupBy shuffle exists at all);
   collect   = global `ORDER BY score DESC, gdoc ASC LIMIT k` over the
               per-partition top-k survivors (TakeOrderedAndProject — the
               distributed analogue of the reference's caller-side min-heap,
               utils/index-search.cpp:687-786).
+
+One kernel serves every single-scan query shape: `topk` runs it as a batch
+of one, `topk_batch` as a batch of N sharing one scan (a term -> [query]
+subscription map decodes each block once and scores it per subscriber),
+and `_eval` leaves run it unpooled. Each query keeps its own top-k pool,
+merge (sum/max/min), min_match and WAND threshold.
 
 Scale shape (the 100-TB argument): the only shuffle in the hot path moves
 PACKED blocks of the matching terms (~1 byte/posting), not exploded
@@ -26,10 +32,14 @@ pruning (reference wanderator, core/formats/formats_10.cpp:2424-2579, and
 block_disjunction, core/search/disjunction.hpp:866-1370) applies to term
 AND flat boolean queries: per-partition threshold = k-th best per-doc SUM
 seen so far; a block is skipped when its own (max_tf, min_dl) bound plus
-the other legs' whole-list bounds cannot beat it. Skipping is safe for
-kSum booleans: every doc in a skipped block has total score <= the bound
-< threshold <= final k-th score, so it can neither enter the top-k nor
-displace a survivor (its emitted partial sum only underestimates).
+the other legs' whole-list bounds cannot beat it — for EVERY query that
+subscribes to its term (a query that does not prune pins the block; at
+batch widths 8/24 r7 measured no block that all subscribers could skip,
+OPTIMIZATION_r07.md §7). Skipping is safe for kSum booleans: every doc in
+a skipped block has total score <= the bound < threshold <= final k-th
+score, so it can neither enter the top-k nor displace a survivor (its
+emitted partial sum only underestimates; likewise a partial kMax). kMin
+prunes only a lone leg: a skipped leg would OVER-estimate a doc's min.
 
 Tie-break parity: score desc, gdoc asc; pruning uses STRICT `<` so a block
 that could tie the k-th score is never skipped (a tied doc with a smaller
@@ -46,7 +56,7 @@ the global sort all see the same values the comparator will.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -98,6 +108,7 @@ from iresearch_spark.search.scorers import (
 
 HITS_SCHEMA = StructType(
     [
+        StructField("qid", IntegerType()),
         StructField("gdoc", LongType()),
         StructField("score", DoubleType()),
         StructField("n_terms", IntegerType()),
@@ -108,15 +119,6 @@ PHRASE_SCHEMA = StructType(
     [
         StructField("gdoc", LongType()),
         StructField("score", DoubleType()),
-    ]
-)
-
-BATCH_HITS_SCHEMA = StructType(
-    [
-        StructField("qid", IntegerType()),
-        StructField("gdoc", LongType()),
-        StructField("score", DoubleType()),
-        StructField("n_terms", IntegerType()),
     ]
 )
 
@@ -142,8 +144,8 @@ MAX_BCAST_TOMBSTONES = int(_os.environ.get("IR_MAX_BCAST_TOMBSTONES", "50000000"
 # block-max pruning is disabled above this many scored legs: a sum-merge
 # bound over W legs includes the other W-1 legs' whole-list upper bounds,
 # so its selectivity decays to zero with width while its per-block cost
-# grows — measured net-negative from a few hundred legs (see _hits_scan)
-WAND_MAX_LEGS = int(_os.environ.get("IR_WAND_MAX_LEGS", "64"))
+# grows — measured net-negative from a few hundred legs (see _wand_plan)
+WAND_MAX_LEGS = 64
 
 
 def _transform_arr(mode: str, a: np.ndarray) -> np.ndarray:
@@ -152,16 +154,6 @@ def _transform_arr(mode: str, a: np.ndarray) -> np.ndarray:
     if mode == "round6":
         return np.floor(a * 1e6 + 0.5) / 1e6
     return a
-
-
-def _transform_scalar(mode: str, x: float) -> float:
-    if mode == "f32":
-        return float(np.float32(x))
-    if mode == "round6":
-        import math
-
-        return math.floor(x * 1e6 + 0.5) / 1e6
-    return x
 
 
 def _not_deleted_mask(deleted: np.ndarray, gdocs: np.ndarray) -> np.ndarray:
@@ -362,6 +354,314 @@ def _damerau_batch(
     return out
 
 
+class _QuerySpec(NamedTuple):
+    """A query the top-k kernel scores in one postings scan: exact or
+    multiterm leaves and flat And/Or of exact terms."""
+
+    scorers: dict[str, TermScorer]
+    min_match: int
+    const_add: float
+    merge: str  # "sum" | "max" | "min" — a key of _REDUCERS
+    # None (vocab regime: the unscored tail is folded into `scorers` as
+    # zero entries) or a Column predicate / term-DataFrame selecting ALL
+    # matched terms for the postings scan (no-vocab regime)
+    tail_sel: object = None
+
+
+_REDUCERS = {"sum": np.add, "max": np.maximum, "min": np.minimum}
+
+
+def _wand_plan(spec: _QuerySpec, prune: bool) -> tuple[dict[str, float], float, bool]:
+    """Block-max WAND plan for one query: (per-term upper bound on the
+    merge of a doc's OTHER legs, the same bound for a tail-term block,
+    whether pruning stays on). Bounds are only computed when it does."""
+    scorers, tail = spec.scorers, spec.tail_sel is not None
+    prune = (
+        prune
+        # (max_tf, min_dl) does not dominate a block for scorers that
+        # reward longer docs (legacy-Norm BM25) — skip nothing
+        and all(getattr(sc, "monotone_dl", True) for sc in scorers.values())
+        # wide multiterm expansions (wildcard/prefix, hundreds+ of legs):
+        # the sum-merge bound carries every OTHER leg's whole-list upper
+        # bound, so it sits far above any reachable threshold and never
+        # skips — while computing per-term block bounds costs real time
+        # (measured: a 1,024-leg wildcard ran ~0.4 s FASTER with
+        # wand=False). Pruning is result-neutral, so cap it by leg count;
+        # narrow booleans keep their 5x kernel-level WAND win.
+        and len(scorers) <= WAND_MAX_LEGS
+        # min over several legs (or unknown tail legs): a skipped block
+        # drops a leg from its docs' partial min, which then OVER-estimates
+        # the true min and can displace a real top-k doc
+        and not (spec.merge == "min" and (len(scorers) > 1 or tail))
+    )
+    if not prune:
+        return {}, np.inf, False
+    if spec.merge == "min":  # a lone leg: the block's own bound
+        return dict.fromkeys(scorers, np.inf), np.inf, True
+    if len(scorers) == 1 and not tail:
+        # single leg: the block's own (max_tf, min_dl) bound suffices — no
+        # whole-list bound needed (works for any scorer, incl. TFIDF)
+        return dict.fromkeys(scorers, 0.0), 0.0, True
+    ubs = {t: sc.term_ub() for t, sc in scorers.items()}
+    if spec.merge == "sum":
+        # tail legs (zero scorer) contribute 0 to every sum bound, so the
+        # scored-dict totals remain valid with a distributed tail; a tail
+        # block's own bound is 0 + the whole scored total. No closed-form
+        # whole-list bound (e.g. TFIDF) -> no pruning
+        total = sum(ubs.values())
+        return {t: total - u for t, u in ubs.items()}, total, bool(np.isfinite(total))
+    other = {
+        t: max((u for x, u in ubs.items() if x != t), default=-np.inf) for t in ubs
+    }
+    top = max(ubs.values(), default=-np.inf)
+    return other, top, all(np.isfinite(u) for u in ubs.values())
+
+
+def _topk_kernel(
+    subs: dict[str, list[tuple[int, TermScorer, float]]],
+    queries: list[tuple[int, float, np.ufunc, bool]],
+    seg_base: dict[str, int],
+    *,
+    k: int | None,
+    mode: str,
+    deleted,  # np.ndarray | pyspark Broadcast of one | None
+    grouped: bool,
+    tail_subs: list[tuple[int, TermScorer, float]] = (),
+    counters: dict | None = None,
+):
+    """mapInPandas kernel for N >= 1 queries sharing one postings scan:
+    packed block rows -> per-(query, doc) merged hits
+    (qid, gdoc, score, n_terms).
+
+    `subs`: term -> [(qid, scorer, other_ub)] — every query whose expansion
+    holds the term. A block is decoded ONCE and scored for each subscriber;
+    other_ub bounds the merge of that query's OTHER legs (block-max WAND).
+    `tail_subs` subscribes blocks whose term is not in `subs` (the no-vocab
+    distributed tail: a shared zero scorer); blocks nobody subscribes to
+    are ignored. `queries[qid]` = (min_match, const_add, merge reducer
+    ufunc — np.add / np.maximum / np.minimum, prune).
+
+    Every query keeps its own top-k pool and threshold (k-th best
+    transformed sum, -inf until full), so at most k rows per query leave
+    the partition. k=None disables pooling and skipping and emits every
+    candidate — _eval leaves, and the anti-join tombstone tier (the
+    post-kernel mask would otherwise strip pool survivors while live docs
+    were already discarded inside the kernel). A block is skipped only
+    when EVERY subscriber prunes and its bound — reducer(block bound,
+    other_ub) + const_add, transformed like the sums — is strictly below
+    that subscriber's threshold. At one query this is plain block-max
+    WAND; a non-pruning subscriber pins the block.
+
+    grouped=True requires rows sorted by (segment, chunkid) within the
+    partition (a doc's blocks for all query terms share one group — chunk
+    co-partitioning from index/build.py). grouped=False is the single-term
+    fast path: every block is its own group (one block per doc per term),
+    decoded and pooled as it arrives with no per-group sort or reduce.
+
+    `counters` (direct/driver-side calls only — a distributed task's dict
+    never comes back): filled with {"blocks", "skipped"} so tests and the
+    kernel bench can pin that block-max pruning actually engages, not just
+    that it doesn't change results.
+    """
+    reducers = list(dict.fromkeys(q[2] for q in queries))
+    q_red = np.array([reducers.index(q[2]) for q in queries])
+    any_prune = k is not None and any(q[3] for q in queries)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        dels = _resolve_deleted(deleted)
+        pools = [np.empty(0, dtype=np.float64) for _ in queries]
+        thr = [-np.inf] * len(queries)
+        out: list[tuple[int, np.ndarray, np.ndarray, np.ndarray]] = []
+        # grouped mode buffers RAW streams; decode happens batched at
+        # flush (wide multiterm expansions put thousands of small blocks
+        # in one group — per-block decode in the row loop dominated)
+        buf_terms: list = []
+        buf_db: list = []
+        buf_tb: list = []
+        buf_lb: list = []
+        grp_shift = 0
+        cur_key: tuple | None = None
+
+        def admit(q: int, docs, sums, counts) -> None:
+            """One query's doc-unique candidates -> min_match, const_add,
+            tombstones, score transform, then its pool and threshold."""
+            min_match, const_add, _, _ = queries[q]
+            if min_match > 1:
+                keep = counts >= min_match
+                docs, sums, counts = docs[keep], sums[keep], counts[keep]
+            if const_add:
+                sums = sums + const_add
+            if dels is not None and dels.size and docs.size:
+                keep = _not_deleted_mask(dels, docs)
+                docs, sums, counts = docs[keep], sums[keep], counts[keep]
+            if not docs.size:
+                return
+            tsums = _transform_arr(mode, sums)
+            if k is not None:
+                pool = np.sort(np.concatenate((pools[q], tsums)))[::-1][:k]
+                pools[q] = pool
+                if pool.size == k:
+                    thr[q] = float(pool[k - 1])
+                    keep = tsums >= thr[q]
+                    docs, tsums, counts = docs[keep], tsums[keep], counts[keep]
+            out.append((q, docs, tsums, counts))
+
+        def flush() -> None:
+            if not buf_terms:
+                return
+            docs, tfs_u, dls_u, counts_b = _decode_block_group(
+                buf_db, buf_tb, buf_lb, grp_shift
+            )
+            codes, uniq = pd.factorize(np.asarray(buf_terms, dtype=object))
+            tok_codes = np.repeat(codes, counts_b)
+            buf_terms.clear()
+            buf_db.clear()
+            buf_tb.clear()
+            buf_lb.clear()
+            # fan out: each (term, subscriber) scores the term's postings
+            parts_p, parts_q, parts_s = [], [], []
+            for ci, t in enumerate(uniq):
+                pos = np.flatnonzero(tok_codes == ci)
+                cast: dict = {}
+                for q, sc, _ in subs.get(t, tail_subs):
+                    if sc.dtype not in cast:
+                        cast[sc.dtype] = (
+                            tfs_u[pos].astype(sc.dtype),
+                            dls_u[pos].astype(sc.dtype),
+                        )
+                    parts_p.append(pos)
+                    parts_q.append(np.full(pos.size, q))
+                    parts_s.append(
+                        sc.scores(*cast[sc.dtype]).astype(np.float64, copy=False)
+                    )
+            pos = np.concatenate(parts_p)
+            qids = np.concatenate(parts_q)
+            scores = np.concatenate(parts_s)
+            # (query, doc) groups; ties keep arrival order, so every doc's
+            # legs reduce in the order its blocks came in
+            order = np.lexsort((pos, docs[pos], qids))
+            qids, d, scores = qids[order], docs[pos[order]], scores[order]
+            bounds = np.flatnonzero(
+                np.concatenate(
+                    ([True], (qids[1:] != qids[:-1]) | (d[1:] != d[:-1]))
+                )
+            )
+            counts = np.diff(np.concatenate((bounds, [d.size])))
+            gq, gd = qids[bounds], d[bounds]
+            if len(reducers) == 1:
+                sums = reducers[0].reduceat(scores, bounds)
+            else:  # one reduceat per merge present, picked per group
+                g_red = q_red[gq]
+                sums = np.empty(gq.size, dtype=np.float64)
+                for j, red in enumerate(reducers):
+                    sel = g_red == j
+                    if sel.any():
+                        sums[sel] = red.reduceat(scores, bounds)[sel]
+            qstarts = np.flatnonzero(np.concatenate(([True], gq[1:] != gq[:-1])))
+            for s, e in zip(qstarts, np.append(qstarts[1:], gq.size)):
+                admit(int(gq[s]), gd[s:e], sums[s:e], counts[s:e])
+
+        def row_bounds(terms, maxtf, mindl) -> list:
+            """Per row: [(qid, WAND bound)] over the row term's subscribers,
+            or None when one of them does not prune (the block is pinned).
+            One numpy pass per (term, subscriber); the row loop only
+            compares."""
+            rb: list = [None] * len(terms)
+            codes, uniq = pd.factorize(terms)
+            for ci, t in enumerate(uniq):
+                tsubs = subs.get(t, tail_subs)
+                if not tsubs or not all(queries[q][3] for q, _, _ in tsubs):
+                    continue
+                rows = np.flatnonzero(codes == ci)
+                cols = []
+                for q, sc, other_ub in tsubs:
+                    _, const_add, reducer, _ = queries[q]
+                    blk = sc.scores(
+                        maxtf[rows].astype(sc.dtype), mindl[rows].astype(sc.dtype)
+                    ).astype(np.float64)
+                    cols.append(_transform_arr(mode, reducer(blk, other_ub) + const_add))
+                qs = [q for q, _, _ in tsubs]
+                for r, b in zip(rows.tolist(), np.column_stack(cols).tolist()):
+                    rb[r] = list(zip(qs, b))
+            return rb
+
+        for pdf in batches:
+            n = len(pdf)
+            if n == 0:
+                continue
+            terms = pdf["term"].to_numpy()
+            segs = pdf["segment"].to_numpy()
+            chunks = pdf["chunkid"].to_numpy() if grouped else None
+            docsb = pdf["docs_bin"].to_numpy()
+            tfsb = pdf["tfs_bin"].to_numpy()
+            dlsb = pdf["dls_bin"].to_numpy()
+            rb = (
+                row_bounds(terms, pdf["max_tf"].to_numpy(), pdf["min_dl"].to_numpy())
+                if any_prune
+                else None
+            )
+            if counters is not None:
+                counters["blocks"] = counters.get("blocks", 0) + n
+            for i in range(n):
+                if grouped:
+                    key = (segs[i], chunks[i])
+                    if key != cur_key:
+                        flush()
+                        cur_key = key
+                        grp_shift = seg_base.get(segs[i], 0)
+                if rb is not None and rb[i] is not None and all(
+                    b < thr[q] for q, b in rb[i]
+                ):
+                    if counters is not None:
+                        counters["skipped"] = counters.get("skipped", 0) + 1
+                    continue  # block-max skip (STRICT <)
+                tsubs = subs.get(terms[i], tail_subs)
+                if not tsubs:
+                    continue
+                if grouped:
+                    # defer decode to the batched flush
+                    buf_terms.append(terms[i])
+                    buf_db.append(docsb[i])
+                    buf_tb.append(tfsb[i])
+                    buf_lb.append(dlsb[i])
+                    continue
+                docs = delta_decode(varint_decode(docsb[i])).astype(
+                    np.int64
+                ) + seg_base.get(segs[i], 0)
+                tfs = varint_decode(tfsb[i])
+                dls = varint_decode(dlsb[i])
+                ones = np.ones(docs.size, dtype=np.int64)
+                for q, sc, _ in tsubs:
+                    leg = sc.scores(tfs.astype(sc.dtype), dls.astype(sc.dtype))
+                    admit(q, docs, leg.astype(np.float64, copy=False), ones)
+        flush()
+        if out:
+            gq = np.concatenate([np.full(d.size, q) for q, d, _, _ in out])
+            gd = np.concatenate([d for _, d, _, _ in out])
+            sc_ = np.concatenate([s for _, _, s, _ in out])
+            nt = np.concatenate([c for _, _, _, c in out])
+            if k is not None:
+                # per-partition per-query top-k cap before emission
+                order = np.lexsort((gd, -sc_, gq))
+                gq_s = gq[order]
+                starts = np.flatnonzero(
+                    np.concatenate(([True], gq_s[1:] != gq_s[:-1]))
+                )
+                sizes = np.diff(np.append(starts, gq_s.size))
+                sel = order[np.arange(gq_s.size) - np.repeat(starts, sizes) < k]
+                gq, gd, sc_, nt = gq[sel], gd[sel], sc_[sel], nt[sel]
+            yield pd.DataFrame(
+                {
+                    "qid": gq.astype(np.int32),
+                    "gdoc": gd,
+                    "score": sc_,
+                    "n_terms": nt.astype(np.int32),
+                }
+            )
+
+    return kernel
+
+
 def _topk_sums_kernel(
     scorers: dict[str, TermScorer],
     other_ub: dict[str, float],
@@ -372,434 +672,23 @@ def _topk_sums_kernel(
     const_add: float,
     merge: str,
     mode: str,
-    deleted,  # np.ndarray | pyspark Broadcast of one | None
+    deleted,
     grouped: bool,
     prune: bool,
     counters: dict | None = None,
-    default_scorer: TermScorer | None = None,
-    other_ub_default: float = 0.0,
 ):
-    """mapInPandas kernel: packed block rows -> per-doc (gdoc, score, n_terms).
-
-    default_scorer: scorer for block terms NOT in `scorers` — the
-    distributed unscored tail (no-vocab regime), always a shared zero
-    scorer; None (default) keeps missing terms a hard error.
-
-    grouped=True requires rows sorted by (segment, chunkid) within the
-    partition (a doc's blocks for all query terms share one group — chunk
-    co-partitioning from index/build.py). grouped=False is the single-term
-    fast path: every block is its own group (one block per doc per term).
-
-    `counters` (direct/driver-side calls only — a distributed task's dict
-    never comes back): filled with {"blocks", "skipped"} so tests and the
-    kernel bench can pin that block-max pruning actually engages, not just
-    that it doesn't change results.
-    """
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dels = _resolve_deleted(deleted)
-        pool = np.empty(0, dtype=np.float64)  # descending top-k transformed sums
-        thr = -np.inf  # current k-th best transformed sum (-inf until full)
-        out_d: list[np.ndarray] = []
-        out_s: list[np.ndarray] = []
-        out_n: list[np.ndarray] = []
-        buf_docs: list[np.ndarray] = []
-        buf_scores: list[np.ndarray] = []
-        # grouped mode buffers RAW streams; decode happens batched at
-        # flush (wide multiterm expansions put thousands of small blocks
-        # in one group — per-block decode in the row loop dominated)
-        buf_terms: list = []
-        buf_db: list = []
-        buf_tb: list = []
-        buf_lb: list = []
-        grp_shift = [0]
-        cur_key: tuple | None = None
-
-        def threshold() -> float | None:
-            return float(pool[k - 1]) if (k is not None and pool.size == k) else None
-
-        def flush() -> None:
-            nonlocal pool, thr
-            if grouped:
-                if not buf_terms:
-                    return
-                # batched decode preserves row order exactly: streams
-                # concatenate in append order, scores scatter back to the
-                # same token positions — identical values and identical
-                # float summation order to the old per-block path
-                docs, tfs_u, dls_u, counts_b = _decode_block_group(
-                    buf_db, buf_tb, buf_lb, grp_shift[0]
-                )
-                codes, uniq = pd.factorize(
-                    np.asarray(buf_terms, dtype=object)
-                )
-                tok_codes = np.repeat(codes, counts_b)
-                scores = np.empty(docs.size, dtype=np.float64)
-                for ci, t in enumerate(uniq):
-                    sc = scorers.get(t, default_scorer)
-                    m = tok_codes == ci
-                    scores[m] = sc.scores(
-                        tfs_u[m].astype(sc.dtype), dls_u[m].astype(sc.dtype)
-                    ).astype(np.float64, copy=False)
-                buf_terms.clear()
-                buf_db.clear()
-                buf_tb.clear()
-                buf_lb.clear()
-            else:
-                if not buf_docs:
-                    return
-                docs = np.concatenate(buf_docs)
-                scores = np.concatenate(buf_scores)
-                buf_docs.clear()
-                buf_scores.clear()
-            # reduce whenever rows are chunk-grouped: a doc can carry
-            # blocks for several terms even when the SCORED dict has 0-1
-            # entries (distributed unscored tail, tail_sel regime) — keying
-            # the reduction off len(scorers) emitted duplicate per-term
-            # rows there (r6 review fallout)
-            if grouped:
-                order = np.argsort(docs, kind="stable")
-                docs = docs[order]
-                scores = scores[order]
-                bounds = np.flatnonzero(
-                    np.concatenate(([True], docs[1:] != docs[:-1]))
-                )
-                reducer = {
-                    "sum": np.add,
-                    "max": np.maximum,
-                    "min": np.minimum,
-                }[merge]
-                sums = reducer.reduceat(scores, bounds)
-                counts = np.diff(np.concatenate((bounds, [docs.size]))).astype(
-                    np.int64
-                )
-                udocs = docs[bounds]
-            else:  # single term: docs already unique & ascending per block
-                udocs, sums = docs, scores
-                counts = np.ones(docs.size, dtype=np.int64)
-            if min_match > 1:
-                keep = counts >= min_match
-                udocs, sums, counts = udocs[keep], sums[keep], counts[keep]
-            if const_add:
-                sums = sums + const_add
-            if dels is not None and dels.size and udocs.size:
-                keep = _not_deleted_mask(dels, udocs)
-                udocs, sums, counts = udocs[keep], sums[keep], counts[keep]
-            if not udocs.size:
-                return
-            tsums = _transform_arr(mode, sums)
-            if k is not None:
-                pool = np.sort(np.concatenate((pool, tsums)))[::-1][:k]
-                t = threshold()
-                if t is not None:
-                    thr = t
-                    keep = tsums >= t
-                    udocs, tsums, counts = udocs[keep], tsums[keep], counts[keep]
-            out_d.append(udocs)
-            out_s.append(tsums)
-            out_n.append(counts)
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            terms = pdf["term"].to_numpy()
-            segs = pdf["segment"].to_numpy()
-            chunks = pdf["chunkid"].to_numpy() if grouped else None
-            maxtf = pdf["max_tf"].to_numpy()
-            mindl = pdf["min_dl"].to_numpy()
-            docsb = pdf["docs_bin"].to_numpy()
-            tfsb = pdf["tfs_bin"].to_numpy()
-            dlsb = pdf["dls_bin"].to_numpy()
-            # Vectorized block-max bounds (r3: the per-row max_score +
-            # _transform_scalar calls cost more than the skipped decodes at
-            # bench scale — VERDICT r2 "WAND inversion"). All bounds for the
-            # batch are computed in one numpy pass per term; the row loop
-            # does a single array-index compare. Arithmetic stays float64
-            # (matching the old scalar path) so bounds never round DOWN.
-            tb = None
-            if prune and k is not None:
-                tb = np.empty(n, dtype=np.float64)
-                # factorized per-term masks: integer compares instead of
-                # O(n_unique * n) object-array equality (r7 — a 1k-term
-                # wildcard expansion spent more in this loop than in the
-                # skipped decodes)
-                t_codes, t_uniq = pd.factorize(terms)
-                for ci, term in enumerate(t_uniq):
-                    m = t_codes == ci
-                    sc_t = scorers.get(term, default_scorer)
-                    blk = sc_t.scores(
-                        maxtf[m].astype(sc_t.dtype), mindl[m].astype(sc_t.dtype)
-                    ).astype(np.float64)
-                    if merge == "sum":
-                        # doc total <= this leg's block bound + every other
-                        # leg's whole-list bound
-                        tb[m] = blk + other_ub.get(term, other_ub_default) + const_add
-                    elif merge == "max":
-                        tb[m] = (
-                            np.maximum(blk, other_ub.get(term, other_ub_default))
-                            + const_add
-                        )
-                    else:  # min: doc present in THIS leg -> min <= blk
-                        tb[m] = blk + const_add
-                tb = _transform_arr(mode, tb)
-            if counters is not None:
-                counters["blocks"] = counters.get("blocks", 0) + n
-            for i in range(n):
-                if grouped:
-                    key = (segs[i], chunks[i])
-                    if key != cur_key:
-                        flush()
-                        cur_key = key
-                        grp_shift[0] = seg_base.get(segs[i], 0)
-                if tb is not None and tb[i] < thr:
-                    if counters is not None:
-                        counters["skipped"] = counters.get("skipped", 0) + 1
-                    continue  # block-max skip (STRICT <)
-                if grouped:
-                    # defer decode to the batched flush
-                    buf_terms.append(terms[i])
-                    buf_db.append(docsb[i])
-                    buf_tb.append(tfsb[i])
-                    buf_lb.append(dlsb[i])
-                    continue
-                term = terms[i]
-                sc = scorers.get(term, default_scorer)
-                docs = delta_decode(varint_decode(docsb[i])).astype(
-                    np.int64
-                ) + seg_base.get(segs[i], 0)
-                tfs = varint_decode(tfsb[i]).astype(sc.dtype)
-                dls = varint_decode(dlsb[i]).astype(sc.dtype)
-                leg = sc.scores(tfs, dls).astype(np.float64, copy=False)
-                buf_docs.append(docs)
-                buf_scores.append(leg)
-                flush()
-        flush()
-        if out_d:
-            gd = np.concatenate(out_d)
-            sc_ = np.concatenate(out_s)
-            nt = np.concatenate(out_n)
-            if k is not None and gd.size > k:
-                sel = np.lexsort((gd, -sc_))[:k]  # per-partition top-k
-                gd, sc_, nt = gd[sel], sc_[sel], nt[sel]
-            yield pd.DataFrame(
-                {"gdoc": gd, "score": sc_, "n_terms": nt.astype(np.int32)}
-            )
-
-    return kernel
-
-
-_MERGE_REDUCERS = (("sum", np.add), ("max", np.maximum), ("min", np.minimum))
-
-
-def _batch_topk_kernel(
-    term_qmap: dict[str, list[tuple[int, TermScorer]]],
-    mm_arr: np.ndarray,
-    ca_arr: np.ndarray,
-    mc_arr: np.ndarray,
-    seg_base: dict[str, int],
-    *,
-    k: int | None,
-    n_queries: int,
-    mode: str,
-    deleted,  # np.ndarray | pyspark Broadcast of one | None
-):
-    """mapInPandas kernel for a BATCH of queries sharing one postings scan.
-
-    `term_qmap`: term -> [(qid, scorer), ...] — every query whose expansion
-    contains the term; a block is decoded ONCE and its postings scored for
-    each subscribed query. Per-query params ride in aligned arrays indexed
-    by qid: `mm_arr` min_match, `ca_arr` const_add, `mc_arr` merge code
-    (index into _MERGE_REDUCERS). Rows must arrive sorted by
-    (segment, chunkid) within the partition (same chunk co-partitioning
-    contract as _topk_sums_kernel, grouped=True).
-
-    Per-query top-k pools bound what leaves the partition: at most
-    k * n_queries candidate rows per partition reach the final per-query
-    ranking. k=None disables pooling and emits every group — required
-    when the tombstone mask is too large to inline (the post-kernel
-    anti-join would otherwise strip pool survivors while live docs were
-    already discarded inside the kernel). No block-max skipping here —
-    the batch path amortizes the scan + decode across queries, which is
-    where the time goes at batch widths; a block would only be skippable
-    when EVERY subscribed query's bound fails, which at realistic batch
-    widths almost never fires.
-    """
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dels = _resolve_deleted(deleted)
-        pools = [np.empty(0, dtype=np.float64) for _ in range(n_queries)]
-        thr = np.full(n_queries, -np.inf)
-        out_q: list[np.ndarray] = []
-        out_d: list[np.ndarray] = []
-        out_s: list[np.ndarray] = []
-        out_n: list[np.ndarray] = []
-        # raw streams buffered per (segment, chunk) group; decode happens
-        # batched at flush (r7 — same rewrite as _topk_sums_kernel)
-        buf_terms: list = []
-        buf_db: list = []
-        buf_tb: list = []
-        buf_lb: list = []
-        grp_shift = [0]
-        cur_key: tuple | None = None
-        any_nonsum = bool((mc_arr != 0).any())
-
-        def flush() -> None:
-            if not buf_terms:
-                return
-            bdocs, tfs_u, dls_u, counts_b = _decode_block_group(
-                buf_db, buf_tb, buf_lb, grp_shift[0]
-            )
-            bounds = np.concatenate(([0], np.cumsum(counts_b)))
-            t_codes, t_uniq = pd.factorize(np.asarray(buf_terms, dtype=object))
-            tok_codes = np.repeat(t_codes, counts_b)
-            n_rows = len(buf_terms)
-            # scores per (term, subscriber) over the term's gathered token
-            # positions (buffer order preserved within each term); the
-            # emission loop below re-slices per row so the concatenated
-            # (docs, scores, qids) arrays are byte-for-byte the ones the
-            # old per-block path produced — identical float sum order
-            scores_by: dict = {}
-            for ci, t in enumerate(t_uniq):
-                pos = np.flatnonzero(tok_codes == ci)
-                cast: dict = {}
-                for qid, sc in term_qmap[t]:
-                    pair = cast.get(sc.dtype)
-                    if pair is None:
-                        pair = (
-                            tfs_u[pos].astype(sc.dtype),
-                            dls_u[pos].astype(sc.dtype),
-                        )
-                        cast[sc.dtype] = pair
-                    scores_by[(ci, qid)] = sc.scores(*pair).astype(
-                        np.float64, copy=False
-                    )
-            ofs = np.zeros(n_rows, dtype=np.int64)
-            seen = np.zeros(len(t_uniq), dtype=np.int64)
-            for i in range(n_rows):
-                ci = t_codes[i]
-                ofs[i] = seen[ci]
-                seen[ci] += counts_b[i]
-            parts_d: list = []
-            parts_s: list = []
-            parts_q: list = []
-            for i in range(n_rows):
-                ci = t_codes[i]
-                d = bdocs[bounds[i] : bounds[i + 1]]
-                for qid, _sc in term_qmap[t_uniq[ci]]:
-                    parts_d.append(d)
-                    parts_s.append(
-                        scores_by[(ci, qid)][ofs[i] : ofs[i] + counts_b[i]]
-                    )
-                    parts_q.append(np.full(d.size, qid, dtype=np.int64))
-            buf_terms.clear()
-            buf_db.clear()
-            buf_tb.clear()
-            buf_lb.clear()
-            if not parts_d:
-                return
-            docs = np.concatenate(parts_d)
-            scores = np.concatenate(parts_s)
-            qids = np.concatenate(parts_q)
-            order = np.lexsort((docs, qids))
-            docs, scores, qids = docs[order], scores[order], qids[order]
-            bounds = np.flatnonzero(
-                np.concatenate(
-                    ([True], (qids[1:] != qids[:-1]) | (docs[1:] != docs[:-1]))
-                )
-            )
-            counts = np.diff(np.concatenate((bounds, [docs.size]))).astype(np.int64)
-            gq = qids[bounds]
-            gd = docs[bounds]
-            if not any_nonsum:
-                sums = np.add.reduceat(scores, bounds)
-            else:
-                # one reduceat per merge family actually present; pick per
-                # group by its query's merge code
-                gm = mc_arr[gq]
-                sums = np.empty(gq.size, dtype=np.float64)
-                for code, (_, red) in enumerate(_MERGE_REDUCERS):
-                    sel = gm == code
-                    if sel.any():
-                        sums[sel] = red.reduceat(scores, bounds)[sel]
-            keep = counts >= mm_arr[gq]
-            gq, gd, sums, counts = gq[keep], gd[keep], sums[keep], counts[keep]
-            sums = sums + ca_arr[gq]
-            if dels is not None and dels.size and gd.size:
-                live = _not_deleted_mask(dels, gd)
-                gq, gd, sums, counts = gq[live], gd[live], sums[live], counts[live]
-            if not gd.size:
-                return
-            tsums = _transform_arr(mode, sums)
-            if k is not None:
-                # per-query pool/threshold update (groups arrive qid-sorted)
-                qstarts = np.flatnonzero(
-                    np.concatenate(([True], gq[1:] != gq[:-1]))
-                )
-                qends = np.concatenate((qstarts[1:], [gq.size]))
-                for s, e in zip(qstarts, qends):
-                    q = int(gq[s])
-                    pool = np.sort(np.concatenate((pools[q], tsums[s:e])))[::-1][:k]
-                    pools[q] = pool
-                    if pool.size == k:
-                        thr[q] = float(pool[k - 1])
-                keep = tsums >= thr[gq]
-                gq, gd, tsums, counts = gq[keep], gd[keep], tsums[keep], counts[keep]
-            out_q.append(gq)
-            out_d.append(gd)
-            out_s.append(tsums)
-            out_n.append(counts)
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            terms = pdf["term"].to_numpy()
-            segs = pdf["segment"].to_numpy()
-            chunks = pdf["chunkid"].to_numpy()
-            docsb = pdf["docs_bin"].to_numpy()
-            tfsb = pdf["tfs_bin"].to_numpy()
-            dlsb = pdf["dls_bin"].to_numpy()
-            for i in range(n):
-                key = (segs[i], chunks[i])
-                if key != cur_key:
-                    flush()
-                    cur_key = key
-                    grp_shift[0] = seg_base.get(segs[i], 0)
-                if not term_qmap.get(terms[i]):
-                    continue
-                buf_terms.append(terms[i])
-                buf_db.append(docsb[i])
-                buf_tb.append(tfsb[i])
-                buf_lb.append(dlsb[i])
-        flush()
-        if out_d:
-            gq = np.concatenate(out_q)
-            gd = np.concatenate(out_d)
-            sc_ = np.concatenate(out_s)
-            nt = np.concatenate(out_n)
-            if k is not None:
-                # per-partition per-query top-k cap before emission
-                order = np.lexsort((gd, -sc_, gq))
-                gq_s = gq[order]
-                starts = np.flatnonzero(
-                    np.concatenate(([True], gq_s[1:] != gq_s[:-1]))
-                )
-                sizes = np.diff(np.concatenate((starts, [gq_s.size])))
-                rank = np.arange(gq_s.size) - np.repeat(starts, sizes)
-                sel = order[rank < k]
-            else:
-                sel = np.arange(gq.size)
-            yield pd.DataFrame(
-                {
-                    "qid": gq[sel].astype(np.int32),
-                    "gdoc": gd[sel],
-                    "score": sc_[sel],
-                    "n_terms": nt[sel].astype(np.int32),
-                }
-            )
-
-    return kernel
+    """`_topk_kernel` for one query, in the per-query argument form the
+    kernel-level tests and bench call."""
+    return _topk_kernel(
+        {t: [(0, sc, other_ub[t])] for t, sc in scorers.items()},
+        [(min_match, const_add, _REDUCERS[merge], prune)],
+        seg_base,
+        k=k,
+        mode=mode,
+        deleted=deleted,
+        grouped=grouped,
+        counters=counters,
+    )
 
 
 def _decode_abs_positions(pos_bin: bytes, tfs: np.ndarray) -> np.ndarray:
@@ -1376,117 +1265,91 @@ class SearchEngine:
         tdf = self.spark.createDataFrame([(t,) for t in sorted(terms)], "term string")
         return df.join(F.broadcast(tdf), "term", "left_semi")
 
+    def _chunk_grouped(self, blocks: DataFrame) -> DataFrame:
+        """ONE block-level exchange: every (segment, chunk) group of packed
+        blocks lands whole in one partition, sorted by (segment, chunkid) —
+        a doc's blocks for all query terms share a group (chunk
+        co-partitioning from index/build.py)."""
+        n_part = self.spark.sparkContext.defaultParallelism
+        return (
+            blocks.withColumn("chunkid", F.shiftright("first_doc", self.chunk_bits))
+            .repartition(n_part, "segment", "chunkid")
+            .sortWithinPartitions("segment", "chunkid")
+        )
+
     def _hits_scan(
         self,
-        scorers: dict[str, TermScorer],
+        specs: list[_QuerySpec],
         *,
-        min_match: int = 1,
-        const_add: float = 0.0,
-        merge: str = "sum",
         k: int | None = None,
         prune: bool = False,
         mode: str | None = None,
-        tail_sel=None,
     ) -> DataFrame:
-        """One job: packed blocks of the given terms -> per-doc summed hits
-        (gdoc, score, n_terms). No shuffle for single-term queries; ONE
-        block-level (segment, chunk) repartition otherwise.
+        """One job: packed blocks of every spec's terms -> per-(query, doc)
+        merged hits (qid, gdoc, score, n_terms), qid = index into `specs`,
+        from ONE `_topk_kernel` pass. No shuffle when every query is a
+        single term; ONE block-level (segment, chunk) repartition otherwise.
 
-        tail_sel (no-vocab multiterm regime): a Column predicate over `term`
-        or a DataFrame of matched terms selecting ALL matched blocks (scored
-        head included) straight off the postings scan — predicates like
-        `term LIKE 'pre%'` push into parquet; a term-DataFrame becomes a
-        semi-join. Blocks whose term is outside `scorers` score ZERO via a
-        shared default scorer in the kernel; no tail term ever reaches the
-        driver."""
+        A spec with a tail_sel (no-vocab multiterm regime) is scanned
+        alone: the Column predicate over `term` or DataFrame of matched
+        terms selects ALL matched blocks (scored head included) straight
+        off the postings scan — predicates like `term LIKE 'pre%'` push
+        into parquet; a term-DataFrame becomes a semi-join. Blocks whose
+        term is outside the scorers score ZERO via a shared zero scorer in
+        the kernel; no tail term ever reaches the driver.
+
+        Per-partition pools count docs the kernel can't see as deleted
+        when the tombstone set exceeds even the broadcast cap — the
+        post-kernel anti-join mask could then strip survivors below k
+        while live docs were already discarded. So that tier runs with no
+        kernel top-k and no pruning (r6 review); up to MAX_BCAST_TOMBSTONES
+        the mask rides a Spark broadcast and both stay on (r7)."""
+        if not self._deleted_inline:
+            k, prune = None, False
+        subs: dict[str, list[tuple[int, TermScorer, float]]] = {}
+        tail_subs: list[tuple[int, TermScorer, float]] = []
+        queries = []
+        for qid, spec in enumerate(specs):
+            other_ub, tail_ub, q_prune = _wand_plan(spec, prune)
+            queries.append(
+                (spec.min_match, spec.const_add, _REDUCERS[spec.merge], q_prune)
+            )
+            for t, sc in spec.scorers.items():
+                subs.setdefault(t, []).append((qid, sc, other_ub.get(t, np.inf)))
+            if spec.tail_sel is not None:
+                zero = PreciseConstTermScorer(0.0) if self.precise else ConstTermScorer(0.0)
+                tail_subs.append((qid, zero, tail_ub))
+        tail_sel = specs[0].tail_sel
         # explicit projection: mapInPandas does not push column pruning into
         # the scan, and pos_bin (the largest column) is not needed to score
         if tail_sel is None:
-            blocks = self._term_filtered(self.postings, list(scorers.keys()))
+            blocks = self._term_filtered(self.postings, list(subs))
         elif isinstance(tail_sel, DataFrame):
-            blocks = self.postings.join(
-                tail_sel.select("term"), "term", "left_semi"
-            )
+            blocks = self.postings.join(tail_sel.select("term"), "term", "left_semi")
         else:
             blocks = self.postings.where(tail_sel)
         blocks = blocks.select(*self.SCAN_COLS)
-        mode = mode or self.leaf_mode
-        if prune and not all(
-            getattr(sc, "monotone_dl", True) for sc in scorers.values()
-        ):
-            # (max_tf, min_dl) does not dominate a block for scorers that
-            # reward longer docs (legacy-Norm BM25) — skip nothing
-            prune = False
-        if prune and len(scorers) > WAND_MAX_LEGS:
-            # wide multiterm expansions (wildcard/prefix, hundreds+ of
-            # legs): the sum-merge bound carries every OTHER leg's
-            # whole-list upper bound, so it sits far above any reachable
-            # threshold and never skips — while computing per-term block
-            # bounds costs real time (measured: a 1,024-leg wildcard ran
-            # ~0.4 s FASTER with wand=False). Pruning is result-neutral,
-            # so cap it by leg count; narrow booleans keep their 5x
-            # kernel-level WAND win. Env-tunable.
-            prune = False
-        other_ub_default = 0.0
-        if len(scorers) == 1 and tail_sel is None:
-            # single leg: the block's own (max_tf, min_dl) bound suffices —
-            # no whole-list bound needed (works for any scorer, incl. TFIDF)
-            other_ub = {t: 0.0 for t in scorers}
-        elif merge == "sum":
-            # tail legs (zero scorer) contribute 0 to every sum bound, so
-            # the scored-dict totals remain valid with a distributed tail;
-            # a tail block's own bound is 0 + the whole scored total
-            ubs = {t: sc.term_ub() for t, sc in scorers.items()}
-            total_ub = sum(ubs.values())
-            other_ub = {t: total_ub - u for t, u in ubs.items()}
-            other_ub_default = total_ub
-            if prune and not np.isfinite(total_ub):
-                prune = False  # no closed-form whole-list bound (e.g. TFIDF)
-        elif merge == "max":
-            ubs = {t: sc.term_ub() for t, sc in scorers.items()}
-            other_ub = {
-                t: max((u for x, u in ubs.items() if x != t), default=float("-inf"))
-                for t in ubs
-            }
-            other_ub_default = max(ubs.values(), default=float("-inf"))
-            if prune and not all(np.isfinite(u) for u in ubs.values()):
-                prune = False
-        else:  # min-merge: block-local bound only
-            other_ub = {t: 0.0 for t in scorers}
-            if prune and tail_sel is not None:
-                prune = False  # min with unknown tail legs: no safe bound
-        grouped = len(scorers) > 1 or min_match > 1 or tail_sel is not None
+        # reduce whenever a query can see several blocks of one doc — also
+        # with a 0-1 entry scorer dict plus a distributed tail (r6)
+        grouped = any(
+            len(s.scorers) > 1 or s.min_match > 1 or s.tail_sel is not None
+            for s in specs
+        )
         if grouped:
-            n_part = self.spark.sparkContext.defaultParallelism
-            blocks = (
-                blocks.withColumn(
-                    "chunkid", F.shiftright("first_doc", self.chunk_bits)
-                )
-                .repartition(n_part, "segment", "chunkid")
-                .sortWithinPartitions("segment", "chunkid")
-            )
+            blocks = self._chunk_grouped(blocks)
         # (r3: the r2 single-term sortWithinPartitions(max_tf desc) that
         # tried to tighten the threshold early cost more than it saved —
         # the pool fills after the first 128-doc block anyway, and the sort
         # added a stage; measured wand > nowand on HighTerm because of it)
-        kernel = _topk_sums_kernel(
-            scorers,
-            other_ub,
+        kernel = _topk_kernel(
+            subs,
+            queries,
             self.seg_base,
             k=k,
-            min_match=min_match,
-            const_add=const_add,
-            merge=merge,
-            mode=mode,
+            mode=mode or self.leaf_mode,
             deleted=self._kernel_deleted if self._deleted_inline else None,
             grouped=grouped,
-            prune=prune,
-            default_scorer=(
-                (PreciseConstTermScorer(0.0) if self.precise else ConstTermScorer(0.0))
-                if tail_sel is not None
-                else None
-            ),
-            other_ub_default=other_ub_default,
+            tail_subs=tail_subs,
         )
         hits = blocks.mapInPandas(kernel, HITS_SCHEMA)
         if not self._deleted_inline:
@@ -1502,16 +1365,10 @@ class SearchEngine:
 
     # -------------------------------------------------------- flat queries
 
-    def _query_spec(
-        self, node: Node, boost: float = 1.0
-    ) -> tuple[dict[str, TermScorer], int, float, str, object] | None:
-        """(scorers, min_match, const_add, merge, tail_sel) for single-scan
-        shapes: exact/multiterm leaves and flat And/Or of exact terms. None
-        when the node needs the general evaluator (phrase legs, nesting,
-        Not). tail_sel is None (tail folded into scorers as zero entries —
-        vocab regime) or a Column predicate / term-DataFrame selecting ALL
-        matched terms for the postings scan (no-vocab regime; terms outside
-        the scorer dict score zero in the kernel)."""
+    def _query_spec(self, node: Node, boost: float = 1.0) -> _QuerySpec | None:
+        """The single-scan spec of exact/multiterm leaves and flat And/Or
+        of exact terms; None when the node needs the general evaluator
+        (phrase legs, nesting, Not)."""
         if isinstance(node, (Term, Terms, Prefix, Wildcard, Fuzzy, Range)):
             expansion, tail = self.expand_tiered(node)
             min_match = node.min_match if isinstance(node, Terms) else 1
@@ -1550,7 +1407,7 @@ class SearchEngine:
                 # no-vocab regime: tail is a predicate/DataFrame — stays
                 # distributed all the way to the postings scan
                 tail_sel = tail
-            return scorers, min_match, 0.0, merge, tail_sel
+            return _QuerySpec(scorers, min_match, 0.0, merge, tail_sel)
         if (
             isinstance(node, (And, Or))
             and all(isinstance(c, Term) for c in node.children)
@@ -1566,13 +1423,13 @@ class SearchEngine:
             }
             if isinstance(node, And):
                 if len(scorers) < len(node.children):
-                    return {}, 1, 0.0, "sum", None  # absent conjunct -> Empty
+                    return _QuerySpec({}, 1, 0.0, "sum")  # absent conjunct -> Empty
                 need = len(node.children)
                 const = node.const_boost * boost
             else:
                 need = node.min_match
                 const = 0.0
-            return scorers, need, const, node.merge, None
+            return _QuerySpec(scorers, need, const, node.merge)
         return None
 
     def _leaf_hits(self, leaf: Node, boost: float) -> DataFrame:
@@ -1581,16 +1438,24 @@ class SearchEngine:
             return self._phrase_hits(leaf, boost)
         spec = self._query_spec(leaf, boost)
         assert spec is not None
-        scorers, min_match, _, merge, tail_sel = spec
-        if not scorers and tail_sel is None:
+        return self._spec_hits(spec)
+
+    def _spec_hits(
+        self,
+        spec: _QuerySpec,
+        k: int | None = None,
+        prune: bool = False,
+        mode: str | None = None,
+    ) -> DataFrame:
+        """(gdoc, score) hits of one single-scan query: every hit by
+        default (leaves), or per-partition top-k survivors with k."""
+        if not spec.scorers and spec.tail_sel is None:
             # empty head AND no distributed tail -> truly no matches; with
             # a tail predicate the scan must still run (scored_terms_limit
             # 0 in the no-vocab regime: every matched doc surfaces at
             # score 0, identical to the vocab path — r6 review)
             return self._empty_hits()
-        return self._hits_scan(
-            scorers, min_match=min_match, merge=merge, tail_sel=tail_sel
-        ).select(
+        return self._hits_scan([spec], k=k, prune=prune, mode=mode).select(
             "gdoc", F.col("score").cast(self._score_t).alias("score")
         )
 
@@ -1633,15 +1498,10 @@ class SearchEngine:
                 )
             )
         shim = _phrase_term_scorer(self.scorer, self.field, idf_sum, boost * leaf.boost)
-        n_part = self.spark.sparkContext.defaultParallelism
-        blocks = (
+        blocks = self._chunk_grouped(
             self._term_filtered(
                 self.postings, list({t for ts in slot_terms for t in ts})
-            )
-            .select("segment", "term", "first_doc", "docs_bin", "tfs_bin", "dls_bin", "pos_bin")
-            .withColumn("chunkid", F.shiftright("first_doc", self.chunk_bits))
-            .repartition(n_part, "segment", "chunkid")
-            .sortWithinPartitions("segment", "chunkid")
+            ).select("segment", "term", "first_doc", "docs_bin", "tfs_bin", "dls_bin", "pos_bin")
         )
         kernel = _phrase_sums_kernel(
             slot_terms,
@@ -1719,16 +1579,7 @@ class SearchEngine:
             return out
         spec = self._query_spec(node, boost)
         if spec is not None:
-            scorers, min_match, const, merge, tail_sel = spec
-            if not scorers and tail_sel is None:
-                return self._empty_hits()
-            return self._hits_scan(
-                scorers,
-                min_match=min_match,
-                const_add=const,
-                merge=merge,
-                tail_sel=tail_sel,
-            ).select("gdoc", F.col("score").cast(self._score_t).alias("score"))
+            return self._spec_hits(spec)
         if isinstance(node, (And, Or)):
             poss = list(node.children)
             legs = [self._eval(c, boost * node.boost) for c in poss]
@@ -1986,42 +1837,17 @@ class SearchEngine:
 
     def topk(self, node: Node, k: int = 10, wand: bool = True) -> DataFrame:
         """Top-k by (score desc, gdoc asc). Single-scan queries (term /
-        multiterm / flat boolean / min-match) run the block-max WAND kernel
-        (reference wanderator + block_disjunction); other shapes fall back
-        to the general evaluator + global TakeOrdered."""
+        multiterm / flat boolean / min-match) run the top-k kernel as a
+        batch of one, with block-max WAND (reference wanderator +
+        block_disjunction); other shapes fall back to the general
+        evaluator. Both finish with a global TakeOrdered."""
         n = normalize(node)
-        spec = (
-            self._query_spec(n)
-            if not isinstance(n, (Phrase, SamePosition, VarPhrase))
-            else None
-        )
-        if spec is not None:
-            scorers, min_match, const, merge, tail_sel = spec
-            if not scorers and tail_sel is None:
-                hits = self._empty_hits()
-            else:
-                prune = wand and self._deleted_inline
-                hits = self._hits_scan(
-                    scorers,
-                    min_match=min_match,
-                    const_add=const,
-                    merge=merge,
-                    # per-partition pools/caps count docs the kernel can't
-                    # see as deleted when the tombstone set exceeds even
-                    # the broadcast cap — the post-kernel anti-join mask
-                    # could then strip survivors below k while live docs
-                    # were already discarded. No kernel top-k in that
-                    # regime (r6 review); up to MAX_BCAST_TOMBSTONES the
-                    # mask now rides a Spark broadcast and pooling + WAND
-                    # stay on (r7, VERDICT r6 next-1)
-                    k=k if self._deleted_inline else None,
-                    prune=prune,
-                    mode=self.final_mode,
-                    tail_sel=tail_sel,
-                ).select("gdoc", F.col("score").cast(self._score_t).alias("score"))
-            return hits.orderBy(F.desc("score"), F.asc("gdoc")).limit(k)
-        hits = self._mask(self._eval(n))
-        hits = hits.select("gdoc", self._final_score("score").alias("score"))
+        spec = self._query_spec(n)
+        if spec is None:
+            hits = self._mask(self._eval(n))
+            hits = hits.select("gdoc", self._final_score("score").alias("score"))
+        else:
+            hits = self._spec_hits(spec, k=k, prune=wand, mode=self.final_mode)
         return hits.orderBy(F.desc("score"), F.asc("gdoc")).limit(k)
 
     def topk_batch(self, queries: dict[str, Node], k: int = 10) -> DataFrame:
@@ -2036,10 +1862,11 @@ class SearchEngine:
         postings scan + job each; here the batch costs ONE scan filtered
         by the UNION of all expansions (still `term IN` pushdown /
         broadcast semi-join), one (segment, chunk) repartition of packed
-        blocks, and one kernel pass that decodes each matched block once
-        and scores it for every subscribed query (term -> [qid] fan-out,
-        per-query top-k pools). Only ~k rows per query per partition leave
-        the kernel; a single window ranks them. The reference has no batch
+        blocks, and one pass of the same top-k kernel `topk` runs, which
+        decodes each matched block once and scores it for every
+        subscribed query (term -> [qid] fan-out, per-query top-k pools and
+        WAND thresholds). Only ~k rows per query per partition leave the
+        kernel; a single window ranks them. The reference has no batch
         API (its per-query cost is a mmap'd in-process walk, ~free); on
         Spark the scan dominates, so amortizing it IS the idiomatic
         restatement.
@@ -2050,83 +1877,34 @@ class SearchEngine:
         multiterm) fall back to per-query `topk` and union in — correct,
         just not amortized.
         """
-        names = list(queries)
-        batched: list[tuple[str, tuple]] = []
+        batched: list[tuple[str, _QuerySpec]] = []
         fallback: list[str] = []
-        for name in names:
-            n = normalize(queries[name])
-            spec = (
-                self._query_spec(n)
-                if not isinstance(n, (Phrase, SamePosition, VarPhrase))
-                else None
-            )
-            if spec is None or spec[4] is not None:
+        for name, node in queries.items():
+            spec = self._query_spec(normalize(node))
+            if spec is None or spec.tail_sel is not None:
                 fallback.append(name)
             else:
                 batched.append((name, spec))
         parts: list[DataFrame] = []
-        if batched:
-            merge_code = {m: i for i, (m, _) in enumerate(_MERGE_REDUCERS)}
-            term_qmap: dict[str, list[tuple[int, TermScorer]]] = {}
-            mm, ca, mc, qnames = [], [], [], []
-            for qid, (name, (scorers, min_match, const, merge, _)) in enumerate(
-                batched
-            ):
-                qnames.append(name)
-                mm.append(min_match)
-                ca.append(const)
-                mc.append(merge_code[merge])
-                for t, sc in scorers.items():
-                    term_qmap.setdefault(t, []).append((qid, sc))
-            all_terms = list(term_qmap)
-            if all_terms:
-                n_part = self.spark.sparkContext.defaultParallelism
-                blocks = (
-                    self._term_filtered(self.postings, all_terms)
-                    .select(*self.SCAN_COLS)
-                    .withColumn(
-                        "chunkid", F.shiftright("first_doc", self.chunk_bits)
-                    )
-                    .repartition(n_part, "segment", "chunkid")
-                    .sortWithinPartitions("segment", "chunkid")
-                )
-                kernel = _batch_topk_kernel(
-                    term_qmap,
-                    np.asarray(mm, dtype=np.int64),
-                    np.asarray(ca, dtype=np.float64),
-                    np.asarray(mc, dtype=np.int64),
-                    self.seg_base,
-                    # kernel pooling only when the tombstone mask is inline
-                    # (same reasoning as topk — r6 review)
-                    k=k if self._deleted_inline else None,
-                    n_queries=len(batched),
-                    mode=self.final_mode,
-                    deleted=self._kernel_deleted if self._deleted_inline else None,
-                )
-                hits = blocks.mapInPandas(kernel, BATCH_HITS_SCHEMA)
-                if not self._deleted_inline:
-                    hits = self._mask(hits)
-                from pyspark.sql.window import Window
+        if any(spec.scorers for _, spec in batched):
+            hits = self._hits_scan(
+                [spec for _, spec in batched], k=k, prune=True, mode=self.final_mode
+            )
+            from pyspark.sql.window import Window
 
-                w = Window.partitionBy("qid").orderBy(
-                    F.desc("score"), F.asc("gdoc")
+            w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("gdoc"))
+            name_map = F.create_map(
+                *[F.lit(x) for qid, (name, _) in enumerate(batched) for x in (qid, name)]
+            )
+            parts.append(
+                hits.withColumn("_rn", F.row_number().over(w))
+                .where(F.col("_rn") <= k)
+                .select(
+                    name_map[F.col("qid")].alias("query"),
+                    "gdoc",
+                    F.col("score").cast(self._score_t).alias("score"),
                 )
-                name_map = F.create_map(
-                    *[
-                        F.lit(x)
-                        for qid, name in enumerate(qnames)
-                        for x in (qid, name)
-                    ]
-                )
-                parts.append(
-                    hits.withColumn("_rn", F.row_number().over(w))
-                    .where(F.col("_rn") <= k)
-                    .select(
-                        name_map[F.col("qid")].alias("query"),
-                        "gdoc",
-                        F.col("score").cast(self._score_t).alias("score"),
-                    )
-                )
+            )
         for name in fallback:
             parts.append(
                 self.topk(queries[name], k).select(

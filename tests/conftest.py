@@ -20,3 +20,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def bursty_store(spark, tmp_path_factory):
+    """30k-doc corpus with term burstiness, one segment: mid-frequency
+    burst terms give block-max WAND real blocks to skip."""
+    from iresearch_spark.corpus import generate_corpus
+    from iresearch_spark.index.segments import IndexStore, build_segment
+
+    store = IndexStore(str(tmp_path_factory.mktemp("bursty") / "idx"))
+    corpus = generate_corpus(spark, 30_000, seed=43, burstiness=0.1)
+    build_segment(spark, store, corpus, "b0")
+    return store

@@ -419,12 +419,16 @@ def test_batch_topk4_duck_parity(spark):
     assert got == exp
 
 
-def test_topk_batch_matches_individual(spark, store800):
+def test_topk_batch_matches_individual(spark, store800, bursty_store):
     """topk_batch must reproduce topk(node, k) row-for-row for every query
     in the batch — across term/boolean/min-match/multiterm/fuzzy shapes on
     the shared-scan path AND fallback shapes (phrase), with an
     absent-term query contributing zero rows. Also pinned in the no-vocab
-    regime (expansion predicates instead of cached dictionaries)."""
+    regime (expansion predicates instead of cached dictionaries). The
+    burst-term pair subscribes two queries (boosts 1 and 2) to one
+    mid-frequency burst term: on the bursty store both WAND thresholds
+    pass the bounds of its second-chunk blocks, so the shared kernel
+    skips blocks whenever the term's two chunks share a partition."""
     from iresearch_spark.search import And, Or, Phrase, Term, Terms
 
     batch = {
@@ -439,8 +443,13 @@ def test_topk_batch_matches_individual(spark, store800):
         "fuzzy": Fuzzy("batch", distance=1, max_terms=1000),
         "phrase": Phrase(("key", "order")),  # fallback (positional kernel)
         "absent": Term("zzz_not_a_term"),
+        "burst": Term("v42"),
+        "burst_x2": Term("v42", boost=2.0),
     }
-    for engine_fn in (lambda: SearchEngine(spark, store800),):
+    for engine_fn in (
+        lambda: SearchEngine(spark, store800),
+        lambda: SearchEngine(spark, bursty_store),
+    ):
         eng = engine_fn()
         eng.prepare_dictionary()
         got = sorted(
@@ -455,6 +464,13 @@ def test_topk_batch_matches_individual(spark, store800):
             ]
         assert got == sorted(exp)
         assert not any(q == "absent" for q, _, _ in got)
+        # an all-single-term batch takes the kernel's no-exchange path
+        terms_only = {n: q for n, q in batch.items() if isinstance(q, Term)}
+        got = sorted(
+            (r["query"], r["gdoc"], round(r["score"], 5))
+            for r in eng.topk_batch(terms_only, 10).collect()
+        )
+        assert got == sorted(e for e in exp if e[0] in terms_only)
 
 
 # --------------------------------------------------------------------------
