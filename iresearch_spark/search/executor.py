@@ -8,12 +8,17 @@ in Spark terms:
               constants (the reference's per-query "stats blob",
               core/search/bm25.cpp:366-410);
   execute   = one job: parquet scan of packed posting blocks with `term IN`
-              pushdown -> (for multi-leg queries) ONE repartition of the
-              packed blocks by (segment, chunk) -> ONE Arrow mapInPandas
-              top-k kernel (`_topk_kernel`) that unpacks delta+varint
-              blocks, scores them, and reduces per-doc sums LOCALLY (a
-              doc's postings for every query term live in the same chunk
-              group, so no downstream groupBy shuffle exists at all);
+              pushdown -> ONE Arrow mapInPandas top-k kernel
+              (`_topk_kernel`) that unpacks delta+varint blocks, scores
+              them, and reduces per-doc sums LOCALLY (a doc's postings for
+              every query term live in the same chunk group, so no
+              downstream groupBy shuffle exists at all). The kernel's task
+              count is chosen from the matched postings the driver already
+              knows (sum of doc_freq, see `_fan_out`): a small scan is
+              coalesced into one task, so even a multi-leg query runs with
+              no exchange; a scan past POSTINGS_PER_TASK fans out to every
+              core, multi-leg queries then through ONE (segment, chunk)
+              repartition of the packed blocks;
   collect   = global `ORDER BY score DESC, gdoc ASC LIMIT k` over the
               per-partition top-k survivors (TakeOrderedAndProject — the
               distributed analogue of the reference's caller-side min-heap,
@@ -27,12 +32,14 @@ merge (sum/max/min), min_match and WAND threshold.
 
 Scale shape (the 100-TB argument): the only shuffle in the hot path moves
 PACKED blocks of the matching terms (~1 byte/posting), not exploded
-(doc, score) rows; single-term queries skip even that. Block-max WAND
-pruning (reference wanderator, core/formats/formats_10.cpp:2424-2579, and
-block_disjunction, core/search/disjunction.hpp:866-1370) applies to term
-AND flat boolean queries: per-partition threshold = k-th best per-doc SUM
-seen so far; a block is skipped when its own (max_tf, min_dl) bound plus
-the other legs' whole-list bounds cannot beat it — for EVERY query that
+(doc, score) rows; single-term queries and small scans skip even that,
+and a scan with more input partitions than cores is never coalesced.
+Block-max WAND pruning (reference wanderator,
+core/formats/formats_10.cpp:2424-2579, and block_disjunction,
+core/search/disjunction.hpp:866-1370) applies to term AND flat boolean
+queries: per-partition threshold = k-th best per-doc SUM seen so far; a
+block is skipped when its own (max_tf, min_dl) bound plus the other legs'
+whole-list bounds cannot beat it — for EVERY query that
 subscribes to its term (a query that does not prune pins the block; at
 batch widths 8/24 r7 measured no block that all subscribers could skip,
 OPTIMIZATION_r07.md §7). Skipping is safe for kSum booleans: every doc in
@@ -60,7 +67,7 @@ from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -354,6 +361,26 @@ def _damerau_batch(
     return out
 
 
+def _term_in(spark: SparkSession, terms: list[str]) -> Column:
+    """`term IN (terms)` built in a fixed number of py4j calls, whatever
+    the term count: the terms cross to the JVM as ONE string, are split
+    there on a character none of them contains, and become the IN-list
+    through `isInCollection`. That is the same `In` expression (and the
+    same pushed parquet filter) `isin(*terms)` builds, which pays several
+    py4j round trips per literal. An empty list matches nothing."""
+    if not terms:
+        return F.lit(False)
+    used = set("".join(terms))
+    # the split is literal, so any unused non-surrogate character works
+    sep = next(c for c in map(chr, range(1, 0xD800)) if c not in used)
+    jvm = spark.sparkContext._jvm
+    parts = jvm.java.util.regex.Pattern.compile(sep, 16).split(  # 16 = LITERAL
+        sep.join(terms), -1  # -1 keeps empty strings
+    )
+    values = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(parts)
+    return Column(F.col("term")._jc.isInCollection(values))
+
+
 class _QuerySpec(NamedTuple):
     """A query the top-k kernel scores in one postings scan: exact or
     multiterm leaves and flat And/Or of exact terms."""
@@ -362,6 +389,9 @@ class _QuerySpec(NamedTuple):
     min_match: int
     const_add: float
     merge: str  # "sum" | "max" | "min" — a key of _REDUCERS
+    # doc_freq of every term in `scorers`: the postings the scan will
+    # match, known on the driver — sizes the kernel fan-out
+    doc_freqs: dict[str, int]
     # None (vocab regime: the unscored tail is folded into `scorers` as
     # zero entries) or a Column predicate / term-DataFrame selecting ALL
     # matched terms for the postings scan (no-vocab regime)
@@ -841,6 +871,7 @@ class SearchEngine:
         self.seg_base = {s.name: s.base_doc for s in self.manifest.segments}
         self.chunk_bits = getattr(self.manifest, "chunk_bits", DEFAULT_CHUNK_BITS)
         self.postings = store.read_union(spark, "postings")
+        self._scan_shape_cache: tuple[int, int] | None = None
         self.has_positions = "pos_bin" in self.postings.columns
         # index-wide term stats (reference prepare() walks all segments);
         # cached — this is the term dictionary, hit by every query's prepare
@@ -963,7 +994,7 @@ class SearchEngine:
                 if i < len(vt) and vt[i] == t:
                     out[t] = vd[i]
             return out
-        rows = self.term_stats.where(F.col("term").isin(*terms)).collect()
+        rows = self.term_stats.where(_term_in(self.spark, terms)).collect()
         return {r["term"]: r["doc_freq"] for r in rows}
 
     def _collect_expansion(self, df: DataFrame, limit: int) -> list[tuple[str, int]]:
@@ -982,7 +1013,7 @@ class SearchEngine:
         if isinstance(leaf, Term):
             return c == leaf.term
         if isinstance(leaf, Terms):
-            return c.isin(*leaf.terms)
+            return _term_in(self.spark, list(leaf.terms))
         if isinstance(leaf, Prefix):
             return c.startswith(leaf.prefix)
         if isinstance(leaf, Wildcard):
@@ -1193,8 +1224,9 @@ class SearchEngine:
         no tail.
 
         Tail representation by regime:
-        - vocab cached (<= VOCAB_CACHE_MAX terms): list[str] — bounded by
-          the cache cap, becomes shared zero-scorer dict entries.
+        - vocab cached (<= VOCAB_CACHE_MAX terms): dict term -> doc_freq —
+          bounded by the cache cap, becomes shared zero-scorer dict
+          entries (its doc_freqs size the scan's fan-out).
         - vocab too large (the 100-TB regime): NEVER a driver list. Only the
           scored head (`limit` rows) is collected; the tail reaches the
           postings scan as a Catalyst predicate Column (prefix/wildcard/
@@ -1202,11 +1234,11 @@ class SearchEngine:
           exactly the reference's lazy bitset which never lists tail terms
           either (multiterm_query.cpp:36-71, formats.hpp:228-229)."""
         if isinstance(leaf, (Term, Terms)):
-            return self.expand(leaf), []
+            return self.expand(leaf), {}
         if isinstance(leaf, Fuzzy) and leaf.transpositions:
             if self._vocab_pairs() is not None:
                 pairs = self._fuzzy_damerau_pairs(leaf)
-                return pairs[: leaf.max_terms], [t for t, _ in pairs[leaf.max_terms :]]
+                return pairs[: leaf.max_terms], dict(pairs[leaf.max_terms :])
             # no-vocab: distributed Damerau verify (executors, mapInPandas);
             # collect ONLY the scored head, tail stays a DataFrame. The
             # verified frame is persisted and cached per (term, distance):
@@ -1228,7 +1260,7 @@ class SearchEngine:
         if local is not None:
             local.sort(key=lambda p: (-p[1], p[0]))
             limit = leaf.max_terms if isinstance(leaf, Fuzzy) else leaf.scored_terms_limit
-            return local[:limit], [t for t, _ in local[limit:]]
+            return local[:limit], dict(local[limit:])
         df, limit = self._leaf_term_matches(leaf)
         rows = (
             df.orderBy(F.desc("doc_freq"), F.asc("term")).limit(limit).collect()
@@ -1261,21 +1293,53 @@ class SearchEngine:
         not serialize a 100k-literal expression through every task binary
         (the expand_tiered scale seam, r3 VERDICT next-10)."""
         if len(terms) <= self.TERM_IN_MAX:
-            return df.where(F.col("term").isin(*terms))
+            return df.where(_term_in(self.spark, terms))
         tdf = self.spark.createDataFrame([(t,) for t in sorted(terms)], "term string")
         return df.join(F.broadcast(tdf), "term", "left_semi")
 
-    def _chunk_grouped(self, blocks: DataFrame) -> DataFrame:
-        """ONE block-level exchange: every (segment, chunk) group of packed
-        blocks lands whole in one partition, sorted by (segment, chunkid) —
-        a doc's blocks for all query terms share a group (chunk
-        co-partitioning from index/build.py)."""
-        n_part = self.spark.sparkContext.defaultParallelism
-        return (
-            blocks.withColumn("chunkid", F.shiftright("first_doc", self.chunk_bits))
-            .repartition(n_part, "segment", "chunkid")
-            .sortWithinPartitions("segment", "chunkid")
-        )
+    # matched postings up to which a scan runs its kernel in ONE task
+    # instead of defaultParallelism tasks (instance-overridable, like
+    # TERM_IN_MAX). Set from scripts/fanin_sweep.py on 4 cores (40k and
+    # 100k docs): every query up to ~110k postings ran faster in one task;
+    # Phrase (the costliest per posting) crossed over between 80k and 200k,
+    # Wildcard and the 24-query batch between 180k and 450k
+    POSTINGS_PER_TASK = 131_072
+
+    def _scan_shape(self) -> tuple[int, int]:
+        """(defaultParallelism, input partitions of the postings scan),
+        counted once per engine (and again after pin_postings) — planning
+        only, no Spark job."""
+        if self._scan_shape_cache is None:
+            self._scan_shape_cache = (
+                self.spark.sparkContext.defaultParallelism,
+                self.postings.rdd.getNumPartitions(),
+            )
+        return self._scan_shape_cache
+
+    def _fan_out(self, blocks: DataFrame, postings: int | None, grouped: bool) -> DataFrame:
+        """Pick the kernel's task count from the postings the scan matches
+        (sum of doc_freq, known on the driver). A kernel task costs a
+        Python worker hand-off whether or not it gets rows, so a scan of at
+        most POSTINGS_PER_TASK postings is coalesced into ONE task; grouped
+        queries then sort by (segment, chunkid) inside it — no exchange.
+        A larger scan, a scan with more input partitions than cores, or
+        one of unknown size (postings=None: the no-vocab distributed tail)
+        keeps the full-width plan, so a large scan is never serialized
+        into one task."""
+        if grouped:
+            blocks = blocks.withColumn(
+                "chunkid", F.shiftright("first_doc", self.chunk_bits)
+            )
+        dp, scan_parts = self._scan_shape()
+        if postings is not None and postings <= self.POSTINGS_PER_TASK and scan_parts <= dp:
+            # every chunk group is whole inside the one partition
+            blocks = blocks.coalesce(1)
+        elif grouped:
+            # ONE block-level exchange: every (segment, chunk) group lands
+            # whole in one partition — a doc's blocks for all query terms
+            # share a group (chunk co-partitioning from index/build.py)
+            blocks = blocks.repartition(dp, "segment", "chunkid")
+        return blocks.sortWithinPartitions("segment", "chunkid") if grouped else blocks
 
     def _hits_scan(
         self,
@@ -1287,8 +1351,9 @@ class SearchEngine:
     ) -> DataFrame:
         """One job: packed blocks of every spec's terms -> per-(query, doc)
         merged hits (qid, gdoc, score, n_terms), qid = index into `specs`,
-        from ONE `_topk_kernel` pass. No shuffle when every query is a
-        single term; ONE block-level (segment, chunk) repartition otherwise.
+        from ONE `_topk_kernel` pass, fanned out by `_fan_out`: no shuffle
+        when every query is a single term or the scan is small; ONE
+        block-level (segment, chunk) repartition otherwise.
 
         A spec with a tail_sel (no-vocab multiterm regime) is scanned
         alone: the Column predicate over `term` or DataFrame of matched
@@ -1320,10 +1385,15 @@ class SearchEngine:
                 zero = PreciseConstTermScorer(0.0) if self.precise else ConstTermScorer(0.0)
                 tail_subs.append((qid, zero, tail_ub))
         tail_sel = specs[0].tail_sel
+        postings = None
         # explicit projection: mapInPandas does not push column pruning into
         # the scan, and pos_bin (the largest column) is not needed to score
         if tail_sel is None:
             blocks = self._term_filtered(self.postings, list(subs))
+            doc_freqs: dict[str, int] = {}
+            for spec in specs:
+                doc_freqs.update(spec.doc_freqs)
+            postings = sum(doc_freqs.values())
         elif isinstance(tail_sel, DataFrame):
             blocks = self.postings.join(tail_sel.select("term"), "term", "left_semi")
         else:
@@ -1335,8 +1405,7 @@ class SearchEngine:
             len(s.scorers) > 1 or s.min_match > 1 or s.tail_sel is not None
             for s in specs
         )
-        if grouped:
-            blocks = self._chunk_grouped(blocks)
+        blocks = self._fan_out(blocks, postings, grouped)
         # (r3: the r2 single-term sortWithinPartitions(max_tf desc) that
         # tried to tighten the threshold early cost more than it saved —
         # the pool fills after the first 128-doc block anyway, and the sort
@@ -1394,7 +1463,9 @@ class SearchEngine:
             # pickles the scorer dict per task, and 10k identical frozen
             # dataclasses serialize as 10k objects unless shared
             tail_sel = None
-            if isinstance(tail, list):
+            doc_freqs = dict(expansion)
+            if isinstance(tail, dict):
+                doc_freqs.update(tail)
                 if tail:
                     zero = (
                         PreciseConstTermScorer(0.0)
@@ -1407,7 +1478,7 @@ class SearchEngine:
                 # no-vocab regime: tail is a predicate/DataFrame — stays
                 # distributed all the way to the postings scan
                 tail_sel = tail
-            return _QuerySpec(scorers, min_match, 0.0, merge, tail_sel)
+            return _QuerySpec(scorers, min_match, 0.0, merge, doc_freqs, tail_sel)
         if (
             isinstance(node, (And, Or))
             and all(isinstance(c, Term) for c in node.children)
@@ -1423,13 +1494,13 @@ class SearchEngine:
             }
             if isinstance(node, And):
                 if len(scorers) < len(node.children):
-                    return _QuerySpec({}, 1, 0.0, "sum")  # absent conjunct -> Empty
+                    return _QuerySpec({}, 1, 0.0, "sum", {})  # absent conjunct -> Empty
                 need = len(node.children)
                 const = node.const_boost * boost
             else:
                 need = node.min_match
                 const = 0.0
-            return _QuerySpec(scorers, need, const, node.merge)
+            return _QuerySpec(scorers, need, const, node.merge, stats)
         return None
 
     def _leaf_hits(self, leaf: Node, boost: float) -> DataFrame:
@@ -1498,10 +1569,13 @@ class SearchEngine:
                 )
             )
         shim = _phrase_term_scorer(self.scorer, self.field, idf_sum, boost * leaf.boost)
-        blocks = self._chunk_grouped(
-            self._term_filtered(
-                self.postings, list({t for ts in slot_terms for t in ts})
-            ).select("segment", "term", "first_doc", "docs_bin", "tfs_bin", "dls_bin", "pos_bin")
+        scanned = set(matched)
+        blocks = self._fan_out(
+            self._term_filtered(self.postings, list(scanned)).select(
+                "segment", "term", "first_doc", "docs_bin", "tfs_bin", "dls_bin", "pos_bin"
+            ),
+            sum(stats[t] for t in scanned),
+            grouped=True,
         )
         kernel = _phrase_sums_kernel(
             slot_terms,
@@ -1683,6 +1757,7 @@ class SearchEngine:
         storage memory comfortably; for a 100-TB index rely on the parquet
         scan's term-IN row-group pruning instead (the default)."""
         self.postings = self.postings.persist()
+        self._scan_shape_cache = None
         self.postings.count()  # materialize eagerly, off the query path
         return self
 
@@ -1763,7 +1838,7 @@ class SearchEngine:
                 StructField("lens", ArrayType(IntegerType())),
             ]
         )
-        blocks = self.postings.where(F.col("term").isin(*terms)).select(
+        blocks = self.postings.where(_term_in(self.spark, list(terms))).select(
             "segment", "term", "doc_count", "docs_bin", "tfs_bin", "off_bin"
         )
         return self._mask(blocks.mapInPandas(kernel, schema))
@@ -1830,7 +1905,7 @@ class SearchEngine:
                 StructField("payloads", ArrayType(BinaryType())),
             ]
         )
-        blocks = self.postings.where(F.col("term").isin(*terms)).select(
+        blocks = self.postings.where(_term_in(self.spark, list(terms))).select(
             "segment", "term", "doc_count", "docs_bin", "tfs_bin", "paylen_bin", "pay_bin"
         )
         return self._mask(blocks.mapInPandas(kernel, schema))
@@ -1861,8 +1936,10 @@ class SearchEngine:
         time — it drains a batch. Per-query execution costs one full
         postings scan + job each; here the batch costs ONE scan filtered
         by the UNION of all expansions (still `term IN` pushdown /
-        broadcast semi-join), one (segment, chunk) repartition of packed
-        blocks, and one pass of the same top-k kernel `topk` runs, which
+        broadcast semi-join), fanned out like any scan (`_fan_out`: one
+        task with no exchange for a small batch, else one (segment, chunk)
+        repartition of packed blocks), and one pass of the same top-k
+        kernel `topk` runs, which
         decodes each matched block once and scores it for every
         subscribed query (term -> [qid] fan-out, per-query top-k pools and
         WAND thresholds). Only ~k rows per query per partition leave the

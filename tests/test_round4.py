@@ -385,14 +385,18 @@ def test_wand_equals_exhaustive_across_chunk_groups(spark, bursty_store, merge):
     (segment, chunk) groups, so thresholds from one group prune the next.
     kMin must not prune there: a skipped block drops a leg from its docs'
     partial min, which over-estimates the true min (single-group fixtures
-    never showed it)."""
+    never showed it). Pinned on both kernel fan-out plans: one task that
+    walks every group, and the (segment, chunk) exchange."""
     from iresearch_spark.search import Or, SearchEngine, Term
+    from tests.plan_shapes import plan_shapes
 
     eng = SearchEngine(spark, bursty_store)
     node = Or((Term("def"), Term("return")), merge=merge)
-    got = [tuple(r) for r in eng.topk(node, 10).collect()]
-    assert len(got) == 10
-    assert got == [tuple(r) for r in eng.topk(node, 10, wand=False).collect()]
+    for shape in plan_shapes(eng):
+        got = [tuple(r) for r in eng.topk(node, 10).collect()]
+        assert len(got) == 10, shape
+        exp = [tuple(r) for r in eng.topk(node, 10, wand=False).collect()]
+        assert got == exp, shape
 
 
 @pytest.mark.parametrize("grouped", [False, True], ids=["flat", "grouped"])

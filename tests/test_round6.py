@@ -428,8 +428,11 @@ def test_topk_batch_matches_individual(spark, store800, bursty_store):
     burst-term pair subscribes two queries (boosts 1 and 2) to one
     mid-frequency burst term: on the bursty store both WAND thresholds
     pass the bounds of its second-chunk blocks, so the shared kernel
-    skips blocks whenever the term's two chunks share a partition."""
+    skips blocks whenever the term's two chunks share a partition. Pinned
+    on both kernel fan-out plans (one task / defaultParallelism tasks),
+    which must also agree with each other."""
     from iresearch_spark.search import And, Or, Phrase, Term, Terms
+    from tests.plan_shapes import plan_shapes
 
     batch = {
         "term": Term("def"),
@@ -452,25 +455,29 @@ def test_topk_batch_matches_individual(spark, store800, bursty_store):
     ):
         eng = engine_fn()
         eng.prepare_dictionary()
-        got = sorted(
-            (r["query"], r["gdoc"], round(r["score"], 5))
-            for r in eng.topk_batch(batch, 10).collect()
-        )
-        exp = []
-        for name, node in batch.items():
-            exp += [
-                (name, r["gdoc"], round(r["score"], 5))
-                for r in eng.topk(node, 10).collect()
-            ]
-        assert got == sorted(exp)
-        assert not any(q == "absent" for q, _, _ in got)
-        # an all-single-term batch takes the kernel's no-exchange path
-        terms_only = {n: q for n, q in batch.items() if isinstance(q, Term)}
-        got = sorted(
-            (r["query"], r["gdoc"], round(r["score"], 5))
-            for r in eng.topk_batch(terms_only, 10).collect()
-        )
-        assert got == sorted(e for e in exp if e[0] in terms_only)
+        per_shape = []
+        for shape in plan_shapes(eng):
+            got = sorted(
+                (r["query"], r["gdoc"], round(r["score"], 5))
+                for r in eng.topk_batch(batch, 10).collect()
+            )
+            exp = []
+            for name, node in batch.items():
+                exp += [
+                    (name, r["gdoc"], round(r["score"], 5))
+                    for r in eng.topk(node, 10).collect()
+                ]
+            assert got == sorted(exp), shape
+            assert not any(q == "absent" for q, _, _ in got)
+            per_shape.append(got)
+            # an all-single-term batch takes the kernel's no-exchange path
+            terms_only = {n: q for n, q in batch.items() if isinstance(q, Term)}
+            got = sorted(
+                (r["query"], r["gdoc"], round(r["score"], 5))
+                for r in eng.topk_batch(terms_only, 10).collect()
+            )
+            assert got == sorted(e for e in exp if e[0] in terms_only), shape
+        assert per_shape[0] == per_shape[1]
 
 
 # --------------------------------------------------------------------------
@@ -636,10 +643,11 @@ def test_multifield_per_field_stats(spark, mf_stores):
 def test_topk_batch_respects_tombstones(spark, store800, tmp_path_factory):
     """The batch kernel inlines the same tombstone mask as the per-query
     kernel: after live deletes, topk_batch == per-query topk, and no
-    deleted gdoc surfaces."""
+    deleted gdoc surfaces — on both kernel fan-out plans."""
     import shutil
 
     from iresearch_spark.search import And, Or, Term
+    from tests.plan_shapes import plan_shapes
 
     root = str(tmp_path_factory.mktemp("bdel") / "idx")
     shutil.copytree(store800.root, root)
@@ -659,17 +667,18 @@ def test_topk_batch_respects_tombstones(spark, store800, tmp_path_factory):
         "or": Or((Term("def"), Term("return"), Term("import")), min_match=2),
         "pre": Prefix("v1", scored_terms_limit=3),
     }
-    got = sorted(
-        (r["query"], r["gdoc"], round(r["score"], 5))
-        for r in eng.topk_batch(batch, 10).collect()
-    )
-    assert got and not any(g % 3 == 0 for _, g, _ in got)
-    exp = sorted(
-        (name, r["gdoc"], round(r["score"], 5))
-        for name, node in batch.items()
-        for r in eng.topk(node, 10).collect()
-    )
-    assert got == exp
+    for shape in plan_shapes(eng):
+        got = sorted(
+            (r["query"], r["gdoc"], round(r["score"], 5))
+            for r in eng.topk_batch(batch, 10).collect()
+        )
+        assert got and not any(g % 3 == 0 for _, g, _ in got), shape
+        exp = sorted(
+            (name, r["gdoc"], round(r["score"], 5))
+            for name, node in batch.items()
+            for r in eng.topk(node, 10).collect()
+        )
+        assert got == exp, shape
 
 
 def test_zero_scored_head_distributed_tail(spark, store800):
@@ -696,10 +705,12 @@ def test_topk_non_inline_tombstones(spark, store800, tmp_path_factory):
     (k=None) — otherwise deleted docs crowd live ones out of the pools and
     the post-kernel anti-join leaves fewer than k live hits (r6 review).
     Pinned by forcing the non-inline regime and requiring identity with
-    the inline engine across plain/batch paths."""
+    the inline engine across plain/batch paths, on both kernel fan-out
+    plans."""
     import shutil
 
     from iresearch_spark.search import And, Or, Term
+    from tests.plan_shapes import plan_shapes
 
     root = str(tmp_path_factory.mktemp("noninl") / "idx")
     shutil.copytree(store800.root, root)
@@ -728,16 +739,17 @@ def test_topk_non_inline_tombstones(spark, store800, tmp_path_factory):
         "and": And((Term("def"), Term("return"))),
         "or": Or((Term("def"), Term("import"))),
     }
-    for name, node in batch.items():
-        exp = [(r["gdoc"], r["score"]) for r in inline.topk(node, 10).collect()]
-        got = [(r["gdoc"], r["score"]) for r in noninl.topk(node, 10).collect()]
-        assert got == exp and len(exp) == 10, (name, got, exp)
-    gotb = sorted(
-        (r["query"], r["gdoc"], round(r["score"], 5))
-        for r in noninl.topk_batch(batch, 10).collect()
-    )
-    expb = sorted(
-        (r["query"], r["gdoc"], round(r["score"], 5))
-        for r in inline.topk_batch(batch, 10).collect()
-    )
-    assert gotb == expb and len(gotb) == 30
+    for shape in plan_shapes(inline, noninl):
+        for name, node in batch.items():
+            exp = [(r["gdoc"], r["score"]) for r in inline.topk(node, 10).collect()]
+            got = [(r["gdoc"], r["score"]) for r in noninl.topk(node, 10).collect()]
+            assert got == exp and len(exp) == 10, (shape, name, got, exp)
+        gotb = sorted(
+            (r["query"], r["gdoc"], round(r["score"], 5))
+            for r in noninl.topk_batch(batch, 10).collect()
+        )
+        expb = sorted(
+            (r["query"], r["gdoc"], round(r["score"], 5))
+            for r in inline.topk_batch(batch, 10).collect()
+        )
+        assert gotb == expb and len(gotb) == 30, shape

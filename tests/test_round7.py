@@ -260,10 +260,11 @@ def test_tombstone_broadcast_tier_keeps_pooling(spark, sf_dir, tmp_path, monkeyp
     batched queries; (b) the broadcast tier reports the kernel-visible
     mask (pooling and pruning stay enabled); (c) a direct kernel run with
     a Broadcast mask prunes blocks and pools to k with results equal to
-    the exhaustive kernel."""
+    the exhaustive kernel. (a) holds on both kernel fan-out plans."""
     import iresearch_spark.search.executor as X
     from iresearch_spark.index.segments import IndexStore, build_segment
     from iresearch_spark.search import Or, SearchEngine, Term
+    from tests.plan_shapes import plan_shapes
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     store = IndexStore(str(tmp_path / "ix"))
@@ -284,15 +285,20 @@ def test_tombstone_broadcast_tier_keeps_pooling(spark, sf_dir, tmp_path, monkeyp
     }
 
     def run_all(eng):
-        out = {n: [tuple(r) for r in eng.topk(q, 10).collect()] for n, q in queries.items()}
-        out["batch"] = [
-            tuple(r) for r in eng.topk_batch(queries, 10).collect()
-        ]
+        out = {}
+        for shape in plan_shapes(eng):
+            for n, q in queries.items():
+                out[shape, n] = [tuple(r) for r in eng.topk(q, 10).collect()]
+            out[shape, "batch"] = [
+                tuple(r) for r in eng.topk_batch(queries, 10).collect()
+            ]
         return out
 
     eng_arr = SearchEngine(spark, store)
     assert eng_arr._deleted_arr is not None and eng_arr._deleted_inline
     ref = run_all(eng_arr)
+    for n in [*queries, "batch"]:
+        assert ref["fan_in", n] == ref["fan_out", n], n
 
     monkeypatch.setattr(X, "MAX_INLINE_TOMBSTONES", 0)
     eng_bc = SearchEngine(spark, store)
