@@ -5,12 +5,17 @@ Reference semantics (SURVEY.md §3.3): MergeWriter computes a per-reader
 docID map — contiguous base offsets when no documents are masked, else a
 dense renumbering of live docs (core/index/merge_writer.cpp:1449-1571) —
 then re-emits postings through the normal format writer with remapped ids.
-The r4 Spark restatement is JOIN-FREE: packed blocks become combiner
-partials in one vectorized kernel (remap = base shift + binary search over
-each segment's sorted inline tombstone array; tombstoned docs drop out
-wholesale, so every per-doc byte stream re-encodes identically), and the
-build's own sorted-stream merge kernel re-blocks them — the only shuffle
-moves packed partial bytes, exactly like the build. The merged segment
+The Spark restatement is JOIN-FREE and has ONE remap rule,
+`remap_doc_ids`: new = old + shift[segment] − |deleted < old| (a binary
+search over each segment's sorted tombstone array, collected to the driver
+in one bounded job), deleted docs dropped. Packed blocks become combiner
+partials in one vectorized kernel that applies it (tombstoned docs drop
+out wholesale, so every per-doc byte stream re-encodes identically), and
+the build's own sorted-stream merge kernel re-blocks them — the only
+shuffle moves packed partial bytes, exactly like the build. The docmap
+write applies the same rule in its own kernel. The join-based
+`build_doc_map` serves only the flat path (force_flat, tombstone sets above
+MERGE_INLINE_DELETES_MAX, non-dense id ranges). The merged segment
 replaces its members in one atomic manifest generation
 (core/index/index_writer.cpp:1340-1650 consolidation commit reconciliation).
 
@@ -45,7 +50,14 @@ from iresearch_spark.index.build import (
     term_stats_from_packed,
 )
 from iresearch_spark.index.codec import BLOCK_SIZE, varint_decode, varint_encode_offsets
-from iresearch_spark.index.segments import IndexStore, Manifest, SegmentMeta
+from iresearch_spark.index.segments import (
+    IndexStore,
+    Manifest,
+    SegmentMeta,
+    _sized_for_write,
+    read_parquet,
+    run_side_tables,
+)
 
 FLAT_SCHEMA = StructType(
     [
@@ -112,6 +124,39 @@ def unpack_postings(blocks: DataFrame, with_positions: bool) -> DataFrame:
     return blocks.mapInPandas(_unpack_kernel(with_positions), FLAT_SCHEMA)
 
 
+def remap_doc_ids(
+    seg_codes: np.ndarray,
+    seg_uniq,
+    docs: np.ndarray,
+    shift_by_seg: dict[str, int],
+    dels_by_seg: dict[str, np.ndarray],
+) -> tuple[np.ndarray, np.ndarray]:
+    """The merge's one docID remap rule, shared by the postings and the
+    docmap kernels: for a doc `old` of segment `seg` (seg_uniq[code]),
+
+        new = old + shift[seg] - |dels[seg] < old|,  kept iff old not in dels[seg]
+
+    (a binary search against the segment's sorted tombstone array). For
+    dense per-segment id ranges and 1-based cumulative shifts this is
+    build_doc_map's dense renumbering of live docs, without a join.
+    Returns (new ids, keep mask), both aligned with `docs`."""
+    new_docs = np.empty(docs.size, dtype=np.int64)
+    keep = np.ones(docs.size, dtype=bool)
+    for si, s in enumerate(seg_uniq):
+        m = seg_codes == si
+        d = docs[m]
+        shift = shift_by_seg[s]
+        dels = dels_by_seg.get(s)
+        if dels is not None and dels.size:
+            below = np.searchsorted(dels, d, side="left")
+            hit = np.minimum(below, dels.size - 1)
+            keep[m] = ~((below < dels.size) & (dels[hit] == d))
+            new_docs[m] = d + shift - below
+        else:
+            new_docs[m] = d + shift
+    return new_docs, keep
+
+
 def _blocks_to_partials_kernel(
     shift_by_seg: dict[str, int],
     dels_by_seg: dict[str, np.ndarray],
@@ -124,14 +169,12 @@ def _blocks_to_partials_kernel(
     (build._PARTIAL_SCHEMA) with REMAPPED doc ids, tombstoned docs dropped,
     and runs split at new-chunk boundaries — the r4 merge path.
 
-    Remap is join-free: new_doc = old + shift[segment] - |deleted < old|
-    (binary search against the segment's sorted tombstone array), which
-    equals build_doc_map's dense rank renumbering for dense per-segment id
-    ranges (asserted by the caller). Whole docs drop out, so the per-doc
-    tf/dl/pos/off value streams are unchanged — they re-encode to identical
-    bytes — and only doc deltas are recomputed. The reference analogue is
-    merge_writer's doc_id_map + re-emission through the normal postings
-    writer (core/index/merge_writer.cpp:1449-1571)."""
+    The remap is `remap_doc_ids`, the same rule the docmap write applies.
+    Whole docs drop out, so the per-doc tf/dl/pos/off value streams are
+    unchanged — they re-encode to identical bytes — and only doc deltas
+    are recomputed. The reference analogue is merge_writer's doc_id_map +
+    re-emission through the normal postings writer
+    (core/index/merge_writer.cpp:1449-1571)."""
     from iresearch_spark.index.build import _PARTIAL_SCHEMA
 
     col_order = [f.name for f in _PARTIAL_SCHEMA.fields]
@@ -143,7 +186,6 @@ def _blocks_to_partials_kernel(
                 continue
             counts = pdf["doc_count"].to_numpy().astype(np.int64)
             bounds = np.concatenate(([0], np.cumsum(counts)))
-            D = int(bounds[-1])
             row_of_doc = np.repeat(np.arange(R), counts)
             ddeltas = varint_decode(b"".join(pdf["docs_bin"])).astype(np.int64)
             cs = np.cumsum(ddeltas)
@@ -153,21 +195,9 @@ def _blocks_to_partials_kernel(
             tfs = varint_decode(b"".join(pdf["tfs_bin"])).astype(np.int64)
             dls = varint_decode(b"".join(pdf["dls_bin"])).astype(np.int64)
             seg_codes, seg_uniq = pd.factorize(pdf["segment"].to_numpy())
-            seg_of_doc = seg_codes[row_of_doc]
-            new_docs = np.empty(D, dtype=np.int64)
-            keep = np.ones(D, dtype=bool)
-            for si, s in enumerate(seg_uniq):
-                m = seg_of_doc == si
-                d = docs[m]
-                shift = shift_by_seg[s]
-                dels = dels_by_seg.get(s)
-                if dels is not None and dels.size:
-                    below = np.searchsorted(dels, d, side="left")
-                    hit = np.minimum(below, dels.size - 1)
-                    keep[m] = ~((below < dels.size) & (dels[hit] == d))
-                    new_docs[m] = d + shift - below
-                else:
-                    new_docs[m] = d + shift
+            new_docs, keep = remap_doc_ids(
+                seg_codes[row_of_doc], seg_uniq, docs, shift_by_seg, dels_by_seg
+            )
             kdocs = new_docs[keep]
             K = kdocs.size
             if K == 0:
@@ -253,6 +283,36 @@ def _blocks_to_partials_kernel(
     return kernel
 
 
+def _docmap_remap_kernel(
+    shift_by_seg: dict[str, int],
+    dels_by_seg: dict[str, np.ndarray],
+    keep_cols: list[str],
+):
+    """Docmap rows (+ segment col) -> the merged docmap: tombstoned docs
+    dropped, `doc_id` remapped by `remap_doc_ids` and moved last. Arrow in
+    and out, so the identity columns pass through with their exact types."""
+    import pyarrow as pa
+
+    def kernel(batches):
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            seg_codes, seg_uniq = pd.factorize(
+                rb.column("segment").to_numpy(zero_copy_only=False)
+            )
+            docs = rb.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
+            new_docs, keep = remap_doc_ids(
+                seg_codes, seg_uniq, docs, shift_by_seg, dels_by_seg
+            )
+            kept = rb.filter(pa.array(keep))
+            yield pa.RecordBatch.from_arrays(
+                [kept.column(c) for c in keep_cols] + [pa.array(new_docs[keep])],
+                names=[*keep_cols, "doc_id"],
+            )
+
+    return kernel
+
+
 def build_doc_map(
     spark: SparkSession,
     store: IndexStore,
@@ -260,7 +320,10 @@ def build_doc_map(
     tombstones: DataFrame | None = None,
     aggs: dict | None = None,
 ) -> DataFrame:
-    """(segment, doc_id) -> new_doc.
+    """(segment, doc_id) -> new_doc, the join-based doc map of the flat
+    merge path only (force_flat, tombstone sets above
+    MERGE_INLINE_DELETES_MAX, non-dense id ranges); the inline path
+    applies `remap_doc_ids` instead.
 
     No tombstones: contiguous base offsets in member order (merge_writer
     base-id assignment). With tombstones: dense renumbering of live docs in
@@ -417,22 +480,27 @@ def merge_segments(
 ) -> SegmentMeta:
     """K-way merge of member segments into one new segment.
 
-    r4 plan shape: packed blocks -> remapped combiner partials (ONE
-    vectorized kernel; the docID remap is join-free — base shift plus a
-    binary search against each segment's sorted inline tombstone array) ->
-    the same sorted-stream merge kernel the combiner build uses
+    Plan shape: packed blocks -> remapped combiner partials (ONE
+    vectorized kernel, one task per core at most) -> the same
+    sorted-stream merge kernel the combiner build uses
     (build._make_partial_merger), which re-blocks at 128 docs by slicing
     the already-encoded tf/dl/pos/off byte streams. Postings never explode
-    to rows and never join doc_map: the only shuffle moves packed partial
-    bytes (~1 B/posting), exactly like the build. Offsets segments
+    to rows and never join a doc map: the only shuffle moves packed
+    partial bytes (~1 B/posting), exactly like the build. Offsets segments
     (`off_bin`) merge losslessly (the r3 flat path dropped the
     highlighting stream — r3 ADVICE).
 
-    Fallback (tombstone sets beyond MERGE_INLINE_DELETES_MAX, or members
-    with non-dense id ranges where the rank formula doesn't hold): the
-    flat unpack -> doc_map join -> pack_postings pipeline. Offsets
-    segments refuse the fallback with a clear error instead of silently
-    dropping the stream."""
+    One remap rule (`remap_doc_ids`): new = old + shift[seg] −
+    |dels[seg] < old|, deleted docs dropped. The postings kernel and the
+    docmap kernel both apply it, from one bounded tombstone collect
+    (at most MERGE_INLINE_DELETES_MAX + 1 rows, one job); with no
+    tombstones the docmap shift is a plain column expression.
+
+    Flat path (`force_flat`, tombstone sets beyond
+    MERGE_INLINE_DELETES_MAX, or members with non-dense id ranges where
+    the rank formula doesn't hold): unpack -> build_doc_map join ->
+    pack_postings. Offsets and payload segments refuse it with a clear
+    error instead of silently dropping the stream."""
     import time as _time
 
     from iresearch_spark.index.build import _PARTIAL_SCHEMA, _make_partial_merger, packed_schema
@@ -442,14 +510,35 @@ def merge_segments(
     assert all(s in by_name for s in seg_names), "unknown segment in merge set"
     seg_names = sorted(seg_names, key=lambda s: manifest.segments.index(by_name[s]))
 
+    # force_flat exists to BENCHMARK the legacy flat pipeline against the
+    # packed path on identical inputs (bench.py merge_10seg_flat); it is
+    # never the production choice
+    inline = not force_flat
+    dels_by_seg: dict[str, np.ndarray] = {}
     if tombstones is None:  # default: apply the store's live-delete mask
         tombstones = store.read_deletes(spark)
     if tombstones is not None:
         # caller-supplied masks may cover segments outside the merge set
-        # (e.g. the store's whole delete table) — restrict first
-        tombstones = tombstones.where(F.col("segment").isin(seg_names))
-        if not tombstones.limit(1).count():
+        # (e.g. the store's whole delete table) — restrict first. ONE
+        # bounded collect: an empty result means no tombstones, one row past
+        # the cap sends the merge down the flat path (which only needs to
+        # know that tombstones exist, so it pulls a single row)
+        tombstones = tombstones.where(F.col("segment").isin(seg_names)).select(
+            "segment", "doc_id"
+        )
+        cap = MERGE_INLINE_DELETES_MAX if inline else 0
+        rows = tombstones.limit(cap + 1).collect()
+        if not rows:
             tombstones = None
+        elif len(rows) > cap:
+            inline = False
+        else:
+            tmp: dict[str, list[int]] = {}
+            for seg, doc in rows:
+                tmp.setdefault(seg, []).append(doc)
+            dels_by_seg = {
+                s: np.unique(np.asarray(v, dtype=np.int64)) for s, v in tmp.items()
+            }
 
     blocks = store.read_union(spark, "postings", seg_names)
     # parquet-footer schema probe (pyarrow) instead of one spark.read per
@@ -490,53 +579,30 @@ def merge_segments(
         }
     else:
         aggs = docmap_aggs(spark, store, seg_names)
-    # with no tombstones the doc map is a pure base-shift expression —
-    # materializing + joining it is a full shuffle of every docmap row for
-    # what a create_map projection computes inline (r7; guide §2.4);
-    # doc_map stays None and the docmap write below shifts directly
-    doc_map = (
-        build_doc_map(spark, store, seg_names, tombstones, aggs).persist()
-        if tombstones is not None
-        else None
-    )
-    dels_by_seg: dict[str, np.ndarray] = {}
-    shift_by_seg: dict[str, int] = {}
-    # force_flat exists to BENCHMARK the legacy flat pipeline against the
-    # packed path on identical inputs (bench.py merge_10seg_flat); it is
-    # never the production choice
-    inline = not force_flat
     if inline and tombstones is not None:
-        if tombstones.count() <= MERGE_INLINE_DELETES_MAX:
-            tmp: dict[str, list[int]] = {}
-            for r in tombstones.select("segment", "doc_id").collect():
-                tmp.setdefault(r["segment"], []).append(r["doc_id"])
-            dels_by_seg = {
-                s: np.unique(np.asarray(v, dtype=np.int64)) for s, v in tmp.items()
-            }
-        else:
-            inline = False
-        if inline:
-            # dense-rank remap needs dense per-segment id ranges (ids are
-            # dense for every assign_doc_ids build; caller ids may not be)
-            inline = all(
-                s in aggs and aggs[s]["hi"] - aggs[s]["lo"] + 1 == aggs[s]["n"]
-                for s in seg_names
-            )
-        if inline:
-            # clip tombstones to each segment's id range so live counts
-            # match build_doc_map's anti-join exactly
-            for s in list(dels_by_seg):
-                a, d = aggs[s], dels_by_seg[s]
-                dels_by_seg[s] = d[(d >= a["lo"]) & (d <= a["hi"])]
-            acc = 1  # dense 1-based renumber (build_doc_map parity)
-            for s in seg_names:
-                a = aggs[s]
-                shift_by_seg[s] = acc - a["lo"]
-                acc += a["n"] - dels_by_seg.get(s, np.empty(0)).size
-    else:
+        # dense-rank remap needs dense per-segment id ranges (ids are
+        # dense for every assign_doc_ids build; caller ids may not be)
+        inline = all(
+            s in aggs and aggs[s]["hi"] - aggs[s]["lo"] + 1 == aggs[s]["n"]
+            for s in seg_names
+        )
+    shift_by_seg: dict[str, int] = {}
+    if tombstones is None:
         shift_by_seg = docmap_shift_spec(spark, store, seg_names, aggs)
+    elif inline:
+        # clip tombstones to each segment's id range so live counts
+        # match build_doc_map's anti-join exactly
+        for s in list(dels_by_seg):
+            a, d = aggs[s], dels_by_seg[s]
+            dels_by_seg[s] = d[(d >= a["lo"]) & (d <= a["hi"])]
+        acc = 1  # dense 1-based renumber (build_doc_map parity)
+        for s in seg_names:
+            a = aggs[s]
+            shift_by_seg[s] = acc - a["lo"]
+            acc += a["n"] - dels_by_seg.get(s, np.empty(0)).size
 
     n_part = spark.sparkContext.defaultParallelism
+    doc_map = None
     if inline:
         in_cols = ["segment", "term", "doc_count", "docs_bin", "tfs_bin", "dls_bin"]
         if with_positions:
@@ -545,7 +611,9 @@ def merge_segments(
             in_cols.append("off_bin")
         if with_payloads:
             in_cols.extend(["paylen_bin", "pay_bin"])
-        partials = blocks.select(*in_cols).mapInPandas(
+        # coalesce: K segments x F files would be K*F Python tasks running
+        # in waves; one task per core runs the kernel in a single wave
+        partials = blocks.select(*in_cols).coalesce(n_part).mapInPandas(
             _blocks_to_partials_kernel(
                 shift_by_seg,
                 dels_by_seg,
@@ -575,8 +643,7 @@ def merge_segments(
                 "id ranges are not dense); split the merge or compact "
                 "tombstones first"
             )
-        if doc_map is None:  # flat path keeps its join-based remap
-            doc_map = build_doc_map(spark, store, seg_names, None, aggs).persist()
+        doc_map = build_doc_map(spark, store, seg_names, tombstones, aggs).persist()
         flat = (
             unpack_postings(blocks, with_positions)
             .join(doc_map, ["segment", "doc_id"])
@@ -591,7 +658,7 @@ def merge_segments(
         packed = pack_postings(flat, with_positions=with_positions, num_partitions=n_part)
 
     packed.write.mode("overwrite").parquet(store.seg_path(new_name, "postings"))
-    packed_disk = spark.read.parquet(store.seg_path(new_name, "postings"))
+    packed_disk = read_parquet(spark, store.seg_path(new_name, "postings"))
 
     def _write_term_stats():
         term_stats_from_packed(packed_disk).repartition(
@@ -605,9 +672,8 @@ def merge_segments(
     # projects doclen out of docmap, exactly like built segments)
     docmaps = store.read_union(spark, "docmap", seg_names)
     keep_cols = [c for c in docmaps.columns if c not in ("doc_id", "segment")]
-    if doc_map is None:
-        # no tombstones: identical output to the join (new_doc = doc_id +
-        # shift[segment]) without shuffling the docmap
+    if tombstones is None:
+        # new_doc = doc_id + shift[segment]: a projection, no shuffle
         base_map = F.create_map(
             *[F.lit(x) for s, sh in shift_by_seg.items() for x in (s, sh)]
         )
@@ -615,11 +681,17 @@ def merge_segments(
             *keep_cols,
             (F.col("doc_id") + base_map[F.col("segment")]).alias("doc_id"),
         )
+    elif inline:
+        new_docmap = docmaps.mapInArrow(
+            _docmap_remap_kernel(shift_by_seg, dels_by_seg, keep_cols),
+            StructType(
+                [docmaps.schema[c] for c in keep_cols] + [StructField("doc_id", LongType())]
+            ),
+        )
     else:
         new_docmap = docmaps.join(doc_map, ["segment", "doc_id"]).select(
             *keep_cols, F.col("new_doc").alias("doc_id")
         )
-    from iresearch_spark.index.segments import _sized_for_write
 
     def _write_docmap():
         _sized_for_write(
@@ -638,13 +710,7 @@ def merge_segments(
 
     # independent side tables overlap from driver threads (guide §2.6),
     # same as build_segment
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for fu in [
-            pool.submit(f) for f in (_write_term_stats, _write_docmap, _write_lineage)
-        ]:
-            fu.result()
+    run_side_tables(spark, _write_term_stats, _write_docmap, _write_lineage)
 
     agg = (
         store.read(spark, new_name, "docmap")

@@ -35,6 +35,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from iresearch_spark.analysis.analyzers import Analyzer, TextAnalyzer
 from iresearch_spark.index.build import (
@@ -48,6 +49,33 @@ from iresearch_spark.index.build import (
 )
 
 TABLES = ("postings", "doclen", "term_stats", "docmap", "lineage")
+
+# footer key under which Spark's parquet writer stores the row schema (JSON)
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(path: str) -> StructType | None:
+    """The Spark schema of a parquet table directory, read with pyarrow from
+    the first data file's footer; None when there is no file or the footer
+    carries no Spark row metadata (e.g. a table pyarrow wrote)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    if not files:
+        return None
+    raw = (pq.read_schema(files[0]).metadata or {}).get(SPARK_ROW_METADATA)
+    return StructType.fromJson(json.loads(raw)) if raw is not None else None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """spark.read.parquet with the schema taken from the footer: a plain
+    read runs a one-task schema-inference job per call, and a merge makes
+    about twenty such reads. Falls back to inference without the key."""
+    schema = footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 @dataclass
@@ -198,26 +226,18 @@ class IndexStore:
         # doclen directory for segments written by older builds.
         if table == "doclen" and not os.path.exists(self.seg_path(seg, "doclen")):
             return (
-                spark.read.parquet(self.seg_path(seg, "docmap"))
+                read_parquet(spark, self.seg_path(seg, "docmap"))
                 .select("doc_id", "len")
                 .where(F.col("len") > 0)
             )
-        return spark.read.parquet(self.seg_path(seg, table))
+        return read_parquet(spark, self.seg_path(seg, table))
 
     def table_columns(self, spark: SparkSession, seg: str, table: str) -> list[str]:
         """Column names of a committed segment table from the parquet
-        footer (pyarrow) — a schema probe without a spark.read per call
-        (merge reads K of these just to detect stream mixes; the Spark
-        path pays file-listing + schema-inference per segment)."""
-        import glob
-
-        path = self.seg_path(seg, table)
-        files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        if files:
-            import pyarrow.parquet as pq
-
-            return list(pq.read_schema(files[0]).names)
-        return self.read(spark, seg, table).columns
+        footer — a schema probe without a DataFrame per call (merge reads
+        K of these just to detect stream mixes)."""
+        schema = footer_schema(self.seg_path(seg, table))
+        return schema.names if schema is not None else self.read(spark, seg, table).columns
 
     def read_union(self, spark: SparkSession, table: str, segments=None) -> DataFrame:
         """Union of a table across segments with a `segment` column."""
@@ -243,7 +263,7 @@ class IndexStore:
         m = self.current()
         if m.deletes_gen is None:
             return None
-        return spark.read.parquet(self.deletes_path(m.deletes_gen))
+        return read_parquet(spark, self.deletes_path(m.deletes_gen))
 
     def remove(self, spark: SparkSession, condemned: DataFrame) -> Manifest:
         """Queue live deletes: `condemned` = (segment, doc_id) rows. Merged
@@ -276,7 +296,7 @@ class IndexStore:
         (the merge applied them physically). Mutates `manifest` in place —
         call AFTER bumping manifest.gen, BEFORE commit()."""
         existing = (
-            spark.read.parquet(self.deletes_path(manifest.deletes_gen))
+            read_parquet(spark, self.deletes_path(manifest.deletes_gen))
             if manifest.deletes_gen is not None
             else None
         )
@@ -344,6 +364,21 @@ def _sized_for_write(df: DataFrame, n_rows: int | None) -> DataFrame:
     # upstream (join/union + projection) into one task; the round-robin
     # exchange of these small rows is cheap and keeps the compute parallel
     return df.repartition(max(1, -(-n_rows // per_file)))
+
+
+def run_side_tables(spark: SparkSession, *writers) -> None:
+    """Run independent table writes from driver threads and wait for all.
+    Each callable is wrapped so its jobs keep the caller's job group and
+    description (a plain pool thread starts jobs with neither, so
+    cancelJobGroup and per-group job counts would miss them)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(writers)) as pool:
+        futs = [pool.submit(inheritable_thread_target(spark)(f)) for f in writers]
+        for fu in futs:
+            fu.result()
 
 
 def build_segment(
@@ -416,7 +451,7 @@ def build_segment(
         # intermediate range-partition cache is no longer needed
         inner_cache.unpersist()
 
-    packed_on_disk = spark.read.parquet(store.seg_path(seg_name, "postings"))
+    packed_on_disk = read_parquet(spark, store.seg_path(seg_name, "postings"))
 
     def _write_term_stats():
         term_stats_from_packed(packed_on_disk).repartition(
@@ -466,14 +501,7 @@ def build_segment(
     # partials are cached): submit them from driver threads so each job's
     # task tail back-fills the others' idle cores (guide §2.6) instead of
     # paying three sequential job latencies
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(f) for f in (_write_term_stats, _write_docmap, _write_lineage)
-        ]
-        for fu in futs:
-            fu.result()
+    run_side_tables(spark, _write_term_stats, _write_docmap, _write_lineage)
     if partials is not None:
         partials.unpersist()
 
@@ -534,7 +562,7 @@ def build_segment_from_tokens(
     n_part = spark.sparkContext.defaultParallelism
     packed = pack_tokens(tokens, with_positions=with_positions, num_partitions=n_part)
     packed.write.mode("overwrite").parquet(store.seg_path(seg_name, "postings"))
-    packed_on_disk = spark.read.parquet(store.seg_path(seg_name, "postings"))
+    packed_on_disk = read_parquet(spark, store.seg_path(seg_name, "postings"))
     term_stats_from_packed(packed_on_disk).repartition(
         max(1, n_part // 4), "term"
     ).sortWithinPartitions("term").write.mode("overwrite").parquet(
